@@ -11,14 +11,23 @@ and all — backticked in Spark SQL, SURVEY.md §7.4).
 Scale notes: the fact is read with Hive partition discovery and written
 back partitioned by (year, month) so date-bounded mart queries prune;
 every dim join broadcasts (dims are KB-sized at any fact scale); the
-marts' group-bys are the only shuffles.
+marts' group-bys are the only shuffles. The independent table writes of
+a layer run concurrently, one pool worker per output and no setting:
+at small scale this overlaps the per-job driver time (planning, schema
+inference, the Observation wait, the commit); at fact scale the fact
+write holds the task slots and the KB-sized dim jobs run in its gaps.
+Do not run two ``run_silver`` calls on one session at once: their
+Observation names would collide.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -28,6 +37,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 # The reference DECLARED an explicit fact schema but never imported it
 # anywhere (schemas.py:6-19 — dead code; SURVEY.md §1.4). Here it is an
@@ -89,17 +101,26 @@ def enrich_customer(dim_customer: DataFrame) -> DataFrame:
     )
 
 
-def run_silver(spark: SparkSession, bronze_dir: str, silver_dir: str) -> dict[str, int]:
-    """Clean every bronze table into silver parquet: fact partitioned by
-    (year, month) (S7), dims compacted to one file (S8). Returns row
-    counts (the reference's verification probe, S13) via ``observe`` —
-    the count rides on the write job itself, so the probe is free; a
-    post-write ``.count()`` would re-execute the whole clean pipeline
-    (a second full scan of the fact at 100 TB)."""
-    from pyspark.sql import Observation
+def _run_concurrently(spark: SparkSession,
+                      tasks: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent Spark actions at once, one worker per task, and
+    return each task's result by name once all of them are done. Every
+    worker inherits the caller's job group, local properties and tags,
+    so its jobs are attributed to the caller's step. A failing task's
+    own exception is re-raised once every worker has stopped."""
+    with ThreadPoolExecutor(max_workers=len(tasks),
+                            thread_name_prefix="medallion") as pool:
+        # One wrapper per task: each wrapper holds its own copy of the
+        # caller's local properties, and the task's SQL execution writes
+        # its execution id into that copy. A shared copy would file every
+        # task's jobs under whichever execution set the id last.
+        futures = {name: pool.submit(inheritable_thread_target(spark)(fn))
+                   for name, fn in tasks.items()}
+        return {name: f.result() for name, f in futures.items()}
 
-    counts: dict[str, int] = {}
 
+def _write_silver_fact(spark: SparkSession, bronze_dir: str,
+                       silver_dir: str) -> int:
     fact = spark.read.schema(FACT_SALES_SCHEMA).parquet(
         os.path.join(bronze_dir, "fact_sales")
     )
@@ -108,29 +129,47 @@ def run_silver(spark: SparkSession, bronze_dir: str, silver_dir: str) -> dict[st
     fact.write.mode("overwrite").partitionBy("year", "month").parquet(
         os.path.join(silver_dir, "fact_sales")
     )
-    counts["fact_sales"] = obs.get["rows"]
+    return obs.get["rows"]
 
+
+def _write_silver_dim(spark: SparkSession, bronze_dir: str,
+                      silver_dir: str, name: str) -> int:
+    df = spark.read.parquet(os.path.join(bronze_dir, f"{name}.parquet"))
+    if name == "dim_customer":
+        df = enrich_customer(df)
+    else:
+        df = df.dropDuplicates([DIM_KEYS[name]])
+    obs = Observation(f"silver_{name}_rows")
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(silver_dir, name))
+    return obs.get["rows"]
+
+
+def run_silver(spark: SparkSession, bronze_dir: str, silver_dir: str) -> dict[str, int]:
+    """Clean every bronze table into silver parquet: fact partitioned by
+    (year, month) (S7), dims compacted to one file (S8). The seven
+    writes are independent and run concurrently. Returns row counts
+    (the reference's verification probe, S13) via ``observe`` — the
+    count rides on the write job itself, so the probe is free; a
+    post-write ``.count()`` would re-execute the whole clean pipeline
+    (a second full scan of the fact at 100 TB)."""
+    tasks = {"fact_sales": partial(_write_silver_fact, spark, bronze_dir, silver_dir)}
     for name in DIM_TABLES:
-        df = spark.read.parquet(os.path.join(bronze_dir, f"{name}.parquet"))
-        if name == "dim_customer":
-            df = enrich_customer(df)
-        else:
-            df = df.dropDuplicates([DIM_KEYS[name]])
-        dim_obs = Observation(f"silver_{name}_rows")
-        df = df.observe(dim_obs, F.count(F.lit(1)).alias("rows"))
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(silver_dir, name)
-        )
-        counts[name] = dim_obs.get["rows"]
-    return counts
+        tasks[name] = partial(_write_silver_dim, spark, bronze_dir, silver_dir, name)
+    return _run_concurrently(spark, tasks)
 
 
 def register_silver_views(spark: SparkSession, silver_dir: str) -> None:
     """Expose silver tables to SQL — replaces the reference's DuckDB
     ingest (S9): same engine end-to-end, no parquet round-trip between
-    silver and gold."""
-    for name in ["fact_sales", *DIM_TABLES]:
-        spark.read.parquet(os.path.join(silver_dir, name)).createOrReplaceTempView(name)
+    silver and gold. The reads (one schema-inference job each) run
+    concurrently; the views are created on the calling thread."""
+    frames = _run_concurrently(spark, {
+        name: partial(spark.read.parquet, os.path.join(silver_dir, name))
+        for name in ["fact_sales", *DIM_TABLES]
+    })
+    for name, df in frames.items():
+        df.createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -209,25 +248,23 @@ MART_SQL: dict[str, str] = {
 def run_gold(spark: SparkSession, silver_dir: str,
              gold_dir: str | None = None) -> dict[str, DataFrame]:
     """Build the four dm_* marts over silver views. When ``gold_dir`` is
-    given each mart also materializes to parquet (column names are
-    sanitized for parquet writers that reject spaces — marts keep their
-    business aliases in-session; SURVEY.md §7.4)."""
+    given each mart also materializes to parquet, the four writes
+    running concurrently (column names are sanitized for parquet writers
+    that reject spaces — marts keep their business aliases in-session;
+    SURVEY.md §7.4)."""
     register_silver_views(spark, silver_dir)
     marts = {name: spark.sql(sql) for name, sql in MART_SQL.items()}
     if gold_dir:
-        for name, df in marts.items():
-            safe = df.select(
-                *[F.col(c).alias(c.replace(" ", "_").lower()) for c in df.columns]
-            )
-            safe.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(gold_dir, name)
-            )
+        _run_concurrently(spark, {
+            name: partial(_write_mart, df, os.path.join(gold_dir, name))
+            for name, df in marts.items()
+        })
     return marts
 
 
-def list_marts(spark: SparkSession) -> list[str]:
-    """Catalog surface (S11): the viewer's dm_% discovery."""
-    return [t.name for t in spark.catalog.listTables() if t.name.startswith("dm_")]
+def _write_mart(df: DataFrame, path: str) -> None:
+    safe = df.select(*[F.col(c).alias(c.replace(" ", "_").lower()) for c in df.columns])
+    safe.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def run_full_pipeline(spark: SparkSession, work_dir: str,

@@ -5,7 +5,16 @@ weekday-convention trap."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import threading
+import time
+import urllib.request
+
+import duckdb
 import pytest
+from pyspark.errors import AnalysisException
 
 from erathia_market_etl_spark.config import SimulationConfig
 from erathia_market_etl_spark.generator.bronze import calendar_rows, generate_bronze
@@ -19,7 +28,14 @@ from erathia_market_etl_spark.generator.simulate import (
     ARTIFACT_POOL_SIZE,
     MarketSimulator,
 )
-from erathia_market_etl_spark.pipeline import run_full_pipeline, run_gold, run_silver
+from erathia_market_etl_spark.pipeline import (
+    DIM_TABLES,
+    MART_SQL,
+    run_full_pipeline,
+    run_gold,
+    run_silver,
+)
+from erathia_market_etl_spark.testing import rows_fingerprint
 
 N_WEEKS = 30
 
@@ -171,3 +187,117 @@ def test_pipeline_deterministic_marts(spark, tmp_path_factory, pipeline_result):
     a = spark.read.parquet(f"{work1}/gold/dm_faction_economy").collect()
     b = spark.read.parquet(f"{work2}/gold/dm_faction_economy").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def _silver_con(silver: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW fact_sales AS SELECT * FROM read_parquet("
+        f"'{silver}/fact_sales/*/*/*.parquet', hive_partitioning=1)")
+    for t in DIM_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{silver}/{t}/*.parquet')")
+    return con
+
+
+def _fingerprint(pdf) -> tuple[list[str], str]:
+    cols = list(pdf.columns)
+    rows = [tuple(r) for r in pdf.itertuples(index=False, name=None)]
+    return sorted(cols), rows_fingerprint(cols, rows)
+
+
+def test_gold_marts_match_duckdb_oracle(pipeline_result):
+    """Each mart run_gold wrote equals DuckDB running MART_SQL over the
+    same silver parquet, and every silver Observation count equals
+    DuckDB's COUNT(*) of the table it rode on."""
+    work, result = pipeline_result
+    con = _silver_con(f"{work}/silver")
+    try:
+        for table, n in result["silver"].items():
+            assert con.execute(f"SELECT COUNT(*) FROM {table}").fetchone()[0] == n, table
+        for mart, sql in MART_SQL.items():
+            want = con.execute(sql.replace("`", '"')).df()
+            want.columns = [c.replace(" ", "_").lower() for c in want.columns]
+            got = con.execute(f"SELECT * FROM read_parquet('{work}/gold/{mart}/*.parquet')").df()
+            assert len(got) == len(want) > 0, mart
+            assert _fingerprint(got) == _fingerprint(want), mart
+    finally:
+        con.close()
+
+
+def _sql_executions(sc) -> list[dict]:
+    """The SQL executions in the session's status store, from the local
+    UI's REST API."""
+    url = (f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+           "/sql?details=false&planDescription=false&offset=0&length=100000")
+    with urllib.request.urlopen(url, timeout=30) as r:
+        return json.loads(r.read())
+
+
+def test_medallion_jobs_keep_callers_job_group(spark, pipeline_result, tmp_path):
+    """The concurrent writes run in pool threads. Every job they launch
+    must still carry the caller's job group, and each write must stay
+    its own SQL execution: workers sharing one copy of the local
+    properties would file every job under one execution id and leave
+    the others RUNNING in the status store."""
+    work, _ = pipeline_result
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe() -> int:
+        sc.setJobGroup("medallion-probe", "probe")
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup("medallion-probe"))
+
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    try:
+        first = probe()
+        first_exec = max(e["id"] for e in _sql_executions(sc))
+        sc.setJobGroup("medallion-tag", "silver and gold")
+        run_silver(spark, f"{work}/bronze", str(tmp_path / "silver"))
+        run_gold(spark, str(tmp_path / "silver"), str(tmp_path / "gold"))
+        last = probe()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    launched = set(range(first + 1, last))
+    assert len(launched) >= 7 + 7 + 4
+    assert launched <= set(tracker.getJobIdsForGroup("medallion-tag"))
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+    # the status store is filled by an asynchronous listener
+    deadline = time.monotonic() + 30
+    while True:
+        execs = [e for e in _sql_executions(sc) if e["id"] > first_exec]
+        if all(e["status"] == "COMPLETED" for e in execs) or time.monotonic() > deadline:
+            break
+        time.sleep(0.2)
+    assert [e["id"] for e in execs if e["status"] != "COMPLETED"] == []
+    writes = [e for e in execs if launched & set(e["successJobIds"])]
+    assert len(writes) >= 7 + 4
+
+
+def test_run_silver_missing_dim_raises_path_not_found(spark, pipeline_result, tmp_path):
+    work, _ = pipeline_result
+    bronze = str(tmp_path / "bronze")
+    shutil.copytree(f"{work}/bronze", bronze)
+    os.remove(f"{bronze}/dim_town.parquet")
+    threads = set(threading.enumerate())
+    t0 = time.perf_counter()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_silver(spark, bronze, str(tmp_path / "silver"))
+    assert time.perf_counter() - t0 < 120
+    assert set(threading.enumerate()) - threads == set()
+
+
+def test_run_gold_missing_silver_table_raises_path_not_found(spark, pipeline_result, tmp_path):
+    work, _ = pipeline_result
+    silver = str(tmp_path / "silver")
+    shutil.copytree(f"{work}/silver", silver)
+    shutil.rmtree(f"{silver}/dim_product")
+    threads = set(threading.enumerate())
+    t0 = time.perf_counter()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_gold(spark, silver, str(tmp_path / "gold"))
+    assert time.perf_counter() - t0 < 120
+    assert set(threading.enumerate()) - threads == set()
