@@ -20,70 +20,47 @@ from ..operators.dedup import (
     candidate_pairs_from_bands,
     exact_dedup_groups,
     jaccard,
-    lsh_bucket_stats,
     minhash_band_table,
     minhash_candidate_pairs,
     shingles_from_tokens,
     simhash_near_pairs,
-    simhash_table,
 )
 from ..operators.similarity import round6
 from ..operators.text import tokens
 from ..sources.parquet_io import adaptive_partitions, fan_out, load_table
 from .registry import query
+from .session_cache import session_frame
 
 # ---------------------------------------------------------------------------
-# Shared MinHash signature stage (r12, VERDICT r11 item 7): the three
-# most expensive headline queries (dedup_minhash_lsh_pairs,
-# dedup_corpus_representatives, pipeline_training_funnel) — plus the
-# cluster/bucket-stats/split siblings — all start from the SAME
-# corpus-wide (doc, band_idx, band_key) band table with identical
-# parameters (3-gram shingles, 8-hash signature, 4 bands of 2). Each
-# used to recompute the full shingle→md5→signature pipeline per query;
-# within one session (the bench run, the driver's correctness sweep, a
-# user's interactive session) that stage is now computed once and
-# PERSISTED (memory-and-disk: spills instead of evicting at scale — a
-# production pipeline staging a multi-TB corpus would materialize it to
-# parquet between jobs, same idea). Values are identical by
-# construction (the stage is deterministic; MIN aggregates are
-# partition-layout-independent), so the oracles and green rows carry
-# over unchanged; the cap window / bucket collect / pair expansion stay
-# LIVE in every consumer plan, so the WindowGroupLimit and shuffle-
-# inventory pins keep their teeth. Keyed by (applicationId, sf_dir) —
-# a handful of entries per session, dropped with the JVM.
+# Shared MinHash signature stage: the three most expensive headline
+# queries (dedup_minhash_lsh_pairs, dedup_corpus_representatives,
+# pipeline_training_funnel) and the cluster/split siblings all start
+# from the SAME corpus-wide (doc, band_idx, band_key) band table with
+# identical parameters (3-gram shingles, 8-hash signature, 4 bands of
+# 2). Within one session the stage is computed once and PERSISTED
+# (memory-and-disk: spills instead of evicting at scale — a production
+# pipeline staging a multi-TB corpus would materialize it to parquet
+# between jobs, same idea) in the session cache. Values are identical
+# by construction (the stage is deterministic; MIN aggregates are
+# partition-layout-independent), so the oracles carry over unchanged;
+# the cap window / bucket collect / pair expansion stay LIVE in every
+# consumer plan, so the WindowGroupLimit and shuffle-inventory pins
+# keep their teeth.
 # ---------------------------------------------------------------------------
-
-_SHARED_BANDS: dict[tuple[str, str], DataFrame] = {}
-# "a handful of entries per session" is ENFORCED, not assumed: beyond
-# this many (session, sf_dir) keys the least-recently-built band table
-# is unpersisted and dropped (a long-lived session sweeping many
-# directories must not accumulate persisted corpora). Component labels
-# follow the band eviction — their checkpoint files are reclaimed by
-# the session's checkpoint GC, but a label frame over an evicted band
-# table would silently rebuild it, so both caches evict together.
-_SHARED_CACHE_MAX = 4
 
 
 def shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached, persisted corpus-wide MinHash band table over
     the ``documents`` fixture (see the block comment above)."""
-    import os
-
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    bands = _SHARED_BANDS.get(key)
-    if bands is None:
-        while len(_SHARED_BANDS) >= _SHARED_CACHE_MAX:
-            old_key = next(iter(_SHARED_BANDS))
-            _SHARED_BANDS.pop(old_key).unpersist()
-            _SHARED_COMPONENTS.pop(old_key, None)
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        bands = minhash_band_table(docs, "text", "doc_id").persist(
+        return minhash_band_table(docs, "text", "doc_id").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        _SHARED_BANDS[key] = bands
-    return bands
+
+    return session_frame(spark, sf_dir, "minhash_bands", build)
 
 
 def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,12 +70,9 @@ def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_pairs_from_bands(shared_minhash_bands(spark, sf_dir))
 
 
-_SHARED_COMPONENTS: dict[tuple[str, str], DataFrame] = {}
-
-
 def shared_pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected-component labels over ``shared_minhash_pairs`` —
-    memoized like the band table (r12): the kernel-escalating
+    """Connected-component labels over ``shared_minhash_pairs``, kept
+    in the session cache like the band table: the kernel-escalating
     component iterations execute EAGERLY (checkpointed rounds) while
     the consuming plan is constructed, and three consumers
     (dedup_cluster_components, dedup_corpus_representatives,
@@ -111,18 +85,14 @@ def shared_pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     subgraph, a different edge set."""
     from ..operators.graph import connected_components_auto
 
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    comp = _SHARED_COMPONENTS.get(key)
-    if comp is None:
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        comp = connected_components_auto(
+        return connected_components_auto(
             shared_minhash_pairs(spark, sf_dir), "doc_a", "doc_b",
             num_partitions=adaptive_partitions(docs),
         )
-        _SHARED_COMPONENTS[key] = comp
-    return comp
+
+    return session_frame(spark, sf_dir, "pair_components", build)
 
 # shared SQL fragments for the oracle twins ---------------------------------
 
@@ -241,27 +211,6 @@ _SIMHASH_CTE = f"""
 """
 
 
-# Driver slot retired r7 (one-in-one-out; see the r7 note in
-# plans/relational.py): the fingerprint table is a strict subset of
-# dedup_simhash_near_pairs' plan — near_pairs computes these exact
-# fingerprints (its oracle embeds the same fp CTE) and then blocks,
-# caps, and hamming-verifies on top. Oracle keeps running locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SIMHASH_FINGERPRINT_ORACLE = f"""
-    WITH {_SIMHASH_CTE}
-    SELECT doc, fingerprint FROM fp ORDER BY doc
-    """
-
-
-def dedup_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """48-bit TF-weighted SimHash per document: token -> 48-bit md5-prefix
-    hash -> per-bit ±1 sums -> sign fingerprint. One explode + one
-    codegen'd 48-column hash aggregate; shuffle is one partial row per
-    (doc, partition)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_table(docs, "text", "doc_id").orderBy("doc")
-
-
 @query(
     "dedup_simhash_near_pairs",
     oracle=f"""
@@ -345,45 +294,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", round6(F.col("_jc")).alias("jaccard_3gram"))
         .orderBy("doc_a", "doc_b")
     )
-
-
-# Driver slot retired r10 (slot economics — frees the budget that lets
-# r11 register the ohlc_hourly/twap_daily market-data pair): the plan is
-# a strict subset of dedup_minhash_lsh_pairs' — the SAME
-# minhash_band_table feeds both, this one stops at two hash aggregates
-# where the pairs query continues into the bucket-join expansion (its
-# oracle embeds the same _BANDS_CTE), and the overflow-accounting output
-# convention stays driver-attested by sim_bucket_stats (sign-LSH
-# family). Oracle keeps running locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-DEDUP_LSH_BUCKET_STATS_ORACLE = f"""
-    WITH {_BANDS_CTE},
-    sizes AS (
-        SELECT band_idx, band_key, COUNT(*) AS sz
-        FROM bands GROUP BY band_idx, band_key
-    )
-    SELECT band_idx,
-           COUNT(*) AS n_buckets,
-           MAX(sz) AS max_bucket_size,
-           CAST(SUM(CASE WHEN sz > {DEFAULT_MAX_BUCKET} THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_overflow_buckets,
-           CAST(SUM(CASE WHEN sz > {DEFAULT_MAX_BUCKET} THEN sz - {DEFAULT_MAX_BUCKET} ELSE 0 END) AS BIGINT)
-               AS n_dropped_members
-    FROM sizes
-    GROUP BY band_idx
-    ORDER BY band_idx
-    """
-
-
-def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH bucket-size profile + truncation accounting: the 'logged
-    overflow' companion to the hot-bucket cap (operators/dedup.py:
-    cap_bucket_members). Reports, per band, how many buckets exist, the
-    largest, and exactly how many members the {K}-cap drops — so a
-    skewed corpus degrades LSH recall *visibly*, never silently. Two
-    hash aggregations over the band table; no pair expansion."""
-    bands = shared_minhash_bands(spark, sf_dir)
-    return lsh_bucket_stats(bands, ["band_idx", "band_key"], DEFAULT_MAX_BUCKET)
 
 
 @query(
@@ -519,8 +429,7 @@ def dedup_corpus_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_fuzzy_prefix_block: blocking + edit-distance verification (the
 # classic record-linkage / entity-resolution near-dup shape — character-
 # level and order-sensitive, catching small edits that token-set
-# Jaccard treats as identical and SimHash as noise). UNREGISTERED (r8
-# queue — local-only per the COVERAGE.md standing policy).
+# Jaccard treats as identical and SimHash as noise).
 # ---------------------------------------------------------------------------
 
 FUZZY_PREFIX_LEN = 16     # blocking key: first 16 chars
@@ -556,6 +465,11 @@ DEDUP_FUZZY_PREFIX_BLOCK_ORACLE = f"""
     """
 
 
+@query(
+    "dedup_fuzzy_prefix_block",
+    oracle=DEDUP_FUZZY_PREFIX_BLOCK_ORACLE,
+    tier="local",
+)
 def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy near-dup pairs by prefix blocking + Levenshtein verify:
     block on (first FUZZY_PREFIX_LEN (16) chars, length DIV
@@ -612,8 +526,7 @@ def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # dedup_bloom_incremental: Bloom-filter membership pre-pass for the
-# incremental-ingest path. UNREGISTERED (r9 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# incremental-ingest path.
 # ---------------------------------------------------------------------------
 
 from ..operators.dedup import (  # noqa: E402  (section-local import)
@@ -691,6 +604,11 @@ DEDUP_BLOOM_INCREMENTAL_ORACLE = f"""
     """
 
 
+@query(
+    "dedup_bloom_incremental",
+    oracle=DEDUP_BLOOM_INCREMENTAL_ORACLE,
+    tier="local",
+)
 def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership pre-pass for incremental-ingest dedup
     (the scale refinement of dedup_incremental_new_docs): history's
@@ -744,8 +662,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dedup_minhash_jaccard_estimate: the accuracy contract of the MinHash
 # sketch itself — signature-agreement estimate vs exact Jaccard per
-# candidate pair. UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# candidate pair.
 # ---------------------------------------------------------------------------
 
 _SIG_MATCHES_SQL = " + ".join(
@@ -809,6 +726,11 @@ DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE = f"""
     """
 
 
+@query(
+    "dedup_minhash_jaccard_estimate",
+    oracle=DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE,
+    tier="local",
+)
 def dedup_minhash_jaccard_estimate(
     spark: SparkSession, sf_dir: str, audit_cap: int = AUDIT_PAIR_CAP
 ) -> DataFrame:
@@ -924,8 +846,7 @@ def dedup_minhash_jaccard_estimate(
 
 # ---------------------------------------------------------------------------
 # sample_hard_negatives: contrastive-training negative mining from the
-# LSH candidate stream. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# LSH candidate stream.
 # ---------------------------------------------------------------------------
 
 NEG_PER_ANCHOR = 2       # hardest negatives kept per anchor document
@@ -955,6 +876,11 @@ SAMPLE_HARD_NEGATIVES_ORACLE = f"""
     """
 
 
+@query(
+    "sample_hard_negatives",
+    oracle=SAMPLE_HARD_NEGATIVES_ORACLE,
+    tier="local",
+)
 def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARD-NEGATIVE mining for contrastive training (retrieval /
     embedding models): the strongest negatives are documents that

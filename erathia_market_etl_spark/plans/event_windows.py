@@ -108,46 +108,6 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "event_id")
 
 
-# Driver slot retired r8 (slot economics: freed one of the two r9
-# slots for pack_context_windows / emb_label_centroids — the judge's
-# documented retirement candidate since r7). Strict-subset rationale:
-# the bounded rowsBetween frame is the same WindowExec machinery the
-# staying family pins from both ends — window_running_total (unbounded
-# frame over identical partition/order keys and the same exact-cents
-# sum) and window_distribution_family (full-partition two-sided
-# frames); the oracle still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-WINDOW_MOVING_FRAME_ORACLE = """
-    SELECT user_id, event_id,
-           ROUND(SUM(CAST(value AS DECIMAL(38,12)))
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 2)::DOUBLE AS frame_sum,
-           MIN(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS frame_min,
-           MAX(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS frame_max
-    FROM events
-    ORDER BY user_id, event_id
-    """
-
-
-def window_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded sliding frame (3 PRECEDING..CURRENT ROW): moving sum/min/max."""
-    events = load_events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-3, Window.currentRow)
-    )
-    return events.select(
-        "user_id", "event_id",
-        (F.round(F.sum(cents("value")).over(w).cast("decimal(38,0)") / 100, 2)
-         .cast("double").alias("frame_sum")),
-        F.min("value").over(w).alias("frame_min"),
-        F.max("value").over(w).alias("frame_max"),
-    ).orderBy("user_id", "event_id")
-
-
 @query(
     "window_distribution_family",
     oracle="""
@@ -374,9 +334,7 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # rollup_multiresolution: hypertable-style continuous-aggregate rollup
-# (minute -> hour -> day), UNREGISTERED (r8 queue — local oracle via
-# tests/test_oracle_parity.py::test_queued_queries_match until a
-# rotation slot opens per the COVERAGE.md standing policy).
+# (minute -> hour -> day).
 # ---------------------------------------------------------------------------
 
 ROLLUP_MULTIRESOLUTION_ORACLE = """
@@ -392,6 +350,11 @@ ROLLUP_MULTIRESOLUTION_ORACLE = """
     """
 
 
+@query(
+    "rollup_multiresolution",
+    oracle=ROLLUP_MULTIRESOLUTION_ORACLE,
+    tier="local",
+)
 def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution rollup (the TimescaleDB continuous-aggregate /
     Druid rollup pattern): aggregate raw events to 1-minute grain, then
@@ -467,7 +430,7 @@ def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # timeseries_gap_fill: dense per-series time spine + last-observation-
-# carried-forward, UNREGISTERED (r8 queue, behind rollup_multiresolution).
+# carried-forward.
 # ---------------------------------------------------------------------------
 
 TIMESERIES_GAP_FILL_ORACLE = """
@@ -500,6 +463,7 @@ TIMESERIES_GAP_FILL_ORACLE = """
     """
 
 
+@query("timeseries_gap_fill", oracle=TIMESERIES_GAP_FILL_ORACLE, tier="local")
 def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-fill + LOCF (the TimescaleDB time_bucket_gapfill / locf
     shape): build the dense hourly spine per series from that series'
@@ -636,8 +600,7 @@ def present_day_rollup(state: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # timeseries_rolling_zscore: rolling-window anomaly flags over the
-# hourly rollup, UNREGISTERED (r8 queue, with rollup_multiresolution /
-# timeseries_gap_fill).
+# hourly rollup.
 # ---------------------------------------------------------------------------
 
 ZSCORE_WINDOW = 24  # trailing hours (ROWS frame over observed hours)
@@ -676,6 +639,11 @@ TIMESERIES_ROLLING_ZSCORE_ORACLE = f"""
     """
 
 
+@query(
+    "timeseries_rolling_zscore",
+    oracle=TIMESERIES_ROLLING_ZSCORE_ORACLE,
+    tier="local",
+)
 def timeseries_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly flags: hourly totals per series, trailing
     ZSCORE_WINDOW (24)-row window, flag hours more than ZSCORE_FLAG (3)
@@ -745,8 +713,7 @@ def timeseries_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # scd2_user_tier_history: type-2 slowly-changing-dimension compaction
-# (CDC gaps-and-islands). UNREGISTERED (r9 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# (CDC gaps-and-islands).
 # ---------------------------------------------------------------------------
 
 SCD2_USER_TIER_HISTORY_ORACLE = """
@@ -788,6 +755,11 @@ SCD2_USER_TIER_HISTORY_ORACLE = """
     """
 
 
+@query(
+    "scd2_user_tier_history",
+    oracle=SCD2_USER_TIER_HISTORY_ORACLE,
+    tier="local",
+)
 def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing-dimension history of each user's value
     tier (low/mid/high), compacted from the raw event stream: one row
@@ -851,8 +823,6 @@ def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # cohort_daily_retention: signup-cohort x day-offset activity grid.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 COHORT_DAILY_RETENTION_ORACLE = """
@@ -881,6 +851,11 @@ COHORT_DAILY_RETENTION_ORACLE = """
     """
 
 
+@query(
+    "cohort_daily_retention",
+    oracle=COHORT_DAILY_RETENTION_ORACLE,
+    tier="local",
+)
 def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily cohort-retention grid (the product-analytics retention
     triangle): users are cohorted by the calendar DAY of their first
@@ -931,8 +906,7 @@ def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # markov_event_transitions: first-order behavior model of the event
-# stream. UNREGISTERED (r9 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# stream.
 # ---------------------------------------------------------------------------
 
 MARKOV_EVENT_TRANSITIONS_ORACLE = """
@@ -958,6 +932,11 @@ MARKOV_EVENT_TRANSITIONS_ORACLE = """
     """
 
 
+@query(
+    "markov_event_transitions",
+    oracle=MARKOV_EVENT_TRANSITIONS_ORACLE,
+    tier="local",
+)
 def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of per-user event behavior:
     for each (from_type, to_type) pair, the count of consecutive
@@ -999,8 +978,6 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # growth_accounting_daily: DAU split into new / returning (+ WAU).
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 GROWTH_ACCOUNTING_DAILY_ORACLE = """
@@ -1037,6 +1014,11 @@ GROWTH_ACCOUNTING_DAILY_ORACLE = """
     """
 
 
+@query(
+    "growth_accounting_daily",
+    oracle=GROWTH_ACCOUNTING_DAILY_ORACLE,
+    tier="local",
+)
 def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily growth accounting (the DAU/WAU board metric): per day, the
     distinct active users split into NEW (first-ever-seen that day) and
@@ -1091,9 +1073,7 @@ def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# path_trigrams_top: most common 3-step behavior paths. UNREGISTERED
-# (r9 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# path_trigrams_top: most common 3-step behavior paths.
 # ---------------------------------------------------------------------------
 
 PATH_TOP_K = 20
@@ -1114,6 +1094,7 @@ PATH_TRIGRAMS_TOP_ORACLE = f"""
     """
 
 
+@query("path_trigrams_top", oracle=PATH_TRIGRAMS_TOP_ORACLE, tier="local")
 def path_trigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PATH_TOP_K (20) most common 3-step event paths across users
     (the path-analysis complement of the first-order Markov matrix —
@@ -1378,8 +1359,7 @@ def present_candles(state: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_cusum_changepoints: CUSUM change-point detection over the daily
-# value series. UNREGISTERED (r10 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# value series.
 # ---------------------------------------------------------------------------
 
 CUSUM_H_MULT = 4  # threshold = CUSUM_H_MULT x mean |deviation|, in cents
@@ -1424,6 +1404,11 @@ TS_CUSUM_CHANGEPOINTS_ORACLE = f"""
     """
 
 
+@query(
+    "ts_cusum_changepoints",
+    oracle=TS_CUSUM_CHANGEPOINTS_ORACLE,
+    tier="local",
+)
 def ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM (Page 1954) change-point detection over the daily total
     value series — the level-shift monitor a metrics warehouse runs on
@@ -1511,8 +1496,6 @@ def cusum_frame(daily: DataFrame, h_mult: int = CUSUM_H_MULT) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # trend_daily_regression: exact per-type OLS trend over the daily series.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TREND_DAILY_REGRESSION_ORACLE = """
@@ -1541,6 +1524,11 @@ TREND_DAILY_REGRESSION_ORACLE = """
     """
 
 
+@query(
+    "trend_daily_regression",
+    oracle=TREND_DAILY_REGRESSION_ORACLE,
+    tier="local",
+)
 def trend_daily_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type trend detection: exact ordinary-least-squares slope of
     the daily value series against the day index — the 'is this KPI
@@ -1605,9 +1593,7 @@ def trend_frame(daily: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# user_lifetime_stats: the per-user lifetime mart. UNREGISTERED (r10 —
-# local-only per the COVERAGE.md standing policy; driver-style evidence
-# via LOCALCHECK).
+# user_lifetime_stats: the per-user lifetime mart.
 # ---------------------------------------------------------------------------
 
 USER_LIFETIME_STATS_ORACLE = """
@@ -1629,6 +1615,7 @@ USER_LIFETIME_STATS_ORACLE = """
     """
 
 
+@query("user_lifetime_stats", oracle=USER_LIFETIME_STATS_ORACLE, tier="local")
 def user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-user LIFETIME mart every analytics stack materializes:
     event count, distinct active days, first/last day, calendar
@@ -1682,8 +1669,7 @@ def user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_seasonal_dow_profile: day-of-week seasonal baseline + residuals
-# over the daily revenue series. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# over the daily revenue series.
 # ---------------------------------------------------------------------------
 
 TS_SEASONAL_DOW_PROFILE_ORACLE = """
@@ -1707,6 +1693,11 @@ TS_SEASONAL_DOW_PROFILE_ORACLE = """
     """
 
 
+@query(
+    "ts_seasonal_dow_profile",
+    oracle=TS_SEASONAL_DOW_PROFILE_ORACLE,
+    tier="local",
+)
 def ts_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal decomposition of the daily revenue series,
     per event type: each day's exact-cents total, the SEASONAL BASELINE
@@ -1763,8 +1754,7 @@ def ts_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_ewma_smoothing: exact truncating-fold EWMA (alpha = 1/2) over the
-# daily series. UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# daily series.
 # ---------------------------------------------------------------------------
 
 TS_EWMA_SMOOTHING_ORACLE = """
@@ -1796,6 +1786,7 @@ TS_EWMA_SMOOTHING_ORACLE = """
     """
 
 
+@query("ts_ewma_smoothing", oracle=TS_EWMA_SMOOTHING_ORACLE, tier="local")
 def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of the daily revenue
     series, alpha = 1/2, as an EXACT integer fold: S_1 = v_1,
@@ -1852,8 +1843,6 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ts_anomaly_mad_flags: the composed anomaly detector — seasonal
 # residuals scored against a robust (median/MAD) envelope.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 ANOMALY_MAD_MULT = 3  # flag |residual - median| > 3 * MAD
@@ -1899,6 +1888,11 @@ TS_ANOMALY_MAD_FLAGS_ORACLE = f"""
     """
 
 
+@query(
+    "ts_anomaly_mad_flags",
+    oracle=TS_ANOMALY_MAD_FLAGS_ORACLE,
+    tier="local",
+)
 def ts_anomaly_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED anomaly detector the time-series family has been
     building toward: de-seasonalize the daily revenue series against
@@ -1980,9 +1974,7 @@ def ts_anomaly_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cdc_merge_apply: MERGE INTO / CDC-upsert batch apply. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# cdc_merge_apply: MERGE INTO / CDC-upsert batch apply.
 # ---------------------------------------------------------------------------
 
 CDC_CUTOFF = "2024-01-21"  # events fixtures span 2024-01-01..01-30 at every SF
@@ -2019,6 +2011,7 @@ CDC_MERGE_APPLY_ORACLE = f"""
     """
 
 
+@query("cdc_merge_apply", oracle=CDC_MERGE_APPLY_ORACLE, tier="local")
 def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO semantics (the Delta/Iceberg CDC-upsert apply) as a
     pure DataFrame pipeline: a BASE dimension state (per-user event
@@ -2084,8 +2077,6 @@ def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # user_activity_streaks: gaps-and-islands longest-streak distribution.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 USER_ACTIVITY_STREAKS_ORACLE = """
@@ -2112,6 +2103,11 @@ USER_ACTIVITY_STREAKS_ORACLE = """
     """
 
 
+@query(
+    "user_activity_streaks",
+    oracle=USER_ACTIVITY_STREAKS_ORACLE,
+    tier="local",
+)
 def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-active-day streak per user, rolled up to the
     engagement distribution (streak length -> user count + the smallest
@@ -2292,8 +2288,7 @@ def peak_concurrency_frame(sessions: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_autocorrelation: exact ACF of the daily revenue series at lags
-# 1..7. UNREGISTERED (r12 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# 1..7.
 # ---------------------------------------------------------------------------
 
 ACF_MAX_LAG = 7
@@ -2329,6 +2324,7 @@ TS_AUTOCORRELATION_ORACLE = f"""
     """
 
 
+@query("ts_autocorrelation", oracle=TS_AUTOCORRELATION_ORACLE, tier="local")
 def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact AUTOCORRELATION (ACF) of the daily revenue series at
     calendar lags 1..{7}: with the n-scaled deviations
@@ -2403,8 +2399,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # window_positional_values: FIRST/LAST/NTH_VALUE — the positional
-# window family. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# window family.
 # ---------------------------------------------------------------------------
 
 WINDOW_POSITIONAL_VALUES_ORACLE = """
@@ -2423,6 +2418,11 @@ WINDOW_POSITIONAL_VALUES_ORACLE = """
     """
 
 
+@query(
+    "window_positional_values",
+    oracle=WINDOW_POSITIONAL_VALUES_ORACLE,
+    tier="local",
+)
 def window_positional_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The POSITIONAL window family — FIRST_VALUE / LAST_VALUE /
     NTH_VALUE — completing the window surface next to the offset

@@ -8,12 +8,9 @@ pretraining pipelines weight or gate documents by it). The connected-
 component kernels used by the dedup queries live in
 ``operators/graph.py``; this module adds the power-iteration side.
 
-``graph_pagerank_influence`` is REGISTERED since r12 (VERDICT r11
-item 5: driver attestation rotated onto the strongest local-only
-heads; one-in-one-out paid by retiring setop_intersect_all_bag). The
-triangle/k-core queries stay local-only per the COVERAGE.md standing
-policy: oracle runs through the driver's own compare in
-``tests/test_oracle_parity.py::test_queued_queries_match``.
+``graph_pagerank_influence`` is in the driver tier; the other graph
+queries are in the local tier, whose oracles run through the driver's
+own compare in ``tests/test_oracle_parity.py``.
 """
 
 from __future__ import annotations
@@ -159,8 +156,7 @@ def graph_pagerank_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # graph_triangle_cohesion: per-part triangle counts over the co-purchase
-# graph. UNREGISTERED (r9 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# graph.
 # ---------------------------------------------------------------------------
 
 TRIANGLE_TOP_K = 50
@@ -205,6 +201,11 @@ GRAPH_TRIANGLE_COHESION_ORACLE = f"""
     """
 
 
+@query(
+    "graph_triangle_cohesion",
+    oracle=GRAPH_TRIANGLE_COHESION_ORACLE,
+    tier="local",
+)
 def graph_triangle_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the part co-purchase graph (an undirected
     edge per distinct part pair that ever shared an order): the
@@ -263,8 +264,6 @@ def graph_triangle_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # basket_pair_lift: market-basket association strength (support + lift).
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 BASKET_TOP_K = 20
@@ -295,6 +294,7 @@ BASKET_PAIR_LIFT_ORACLE = f"""
     """
 
 
+@query("basket_pair_lift", oracle=BASKET_PAIR_LIFT_ORACLE, tier="local")
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association mining: the BASKET_TOP_K (20) most
     co-purchased part pairs with their support (co-occurrence count)
@@ -349,8 +349,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # graph_kcore_loyalty: fixed-round k-core peeling over the repeat-trade
-# graph. UNREGISTERED (r11 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# graph.
 # ---------------------------------------------------------------------------
 
 KCORE_K = 3           # survive with >= 3 repeat-trade partners
@@ -402,6 +401,7 @@ GRAPH_KCORE_LOYALTY_ORACLE = (
 ).format(minn=KCORE_MIN_TRADES, last=KCORE_ROUNDS)
 
 
+@query("graph_kcore_loyalty", oracle=GRAPH_KCORE_LOYALTY_ORACLE, tier="local")
 def graph_kcore_loyalty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition of the REPEAT-TRADE graph: nodes are
     customers (even ids) and suppliers (odd), an edge means the pair
@@ -465,9 +465,7 @@ def graph_kcore_loyalty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # graph_hits_influence: two-round integer HITS (hubs & authorities)
-# over the DIRECTED customer->supplier trading graph. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# over the DIRECTED customer->supplier trading graph.
 # ---------------------------------------------------------------------------
 
 HITS_ROUNDS = 2  # the contract: round-2 accounting state, not the fixpoint
@@ -501,6 +499,11 @@ GRAPH_HITS_INFLUENCE_ORACLE = """
     """
 
 
+@query(
+    "graph_hits_influence",
+    oracle=GRAPH_HITS_INFLUENCE_ORACLE,
+    tier="local",
+)
 def graph_hits_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs-and-authorities over the DIRECTED customer->supplier
     trading graph (an edge per distinct pair that ever traded) — the
@@ -571,8 +574,7 @@ def graph_hits_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # graph_label_propagation: synchronous LPA community detection over the
-# repeat-trade graph. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# repeat-trade graph.
 # ---------------------------------------------------------------------------
 
 LPA_ROUNDS = 2        # THE CONTRACT: round-2 accounting state
@@ -621,6 +623,11 @@ GRAPH_LABEL_PROPAGATION_ORACLE = (
 ).format(minn=LPA_MIN_TRADES, last=LPA_ROUNDS)
 
 
+@query(
+    "graph_label_propagation",
+    oracle=GRAPH_LABEL_PROPAGATION_ORACLE,
+    tier="local",
+)
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous LABEL PROPAGATION (Raghavan 2007) community
     detection over the same repeat-trade graph the k-core peels: every
@@ -705,8 +712,6 @@ def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # graph_bfs_reach: k-hop BFS reachability from the hub node.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 BFS_HOPS = 3          # THE CONTRACT: hop-3 accounting state
@@ -755,6 +760,7 @@ GRAPH_BFS_REACH_ORACLE = (
 ).format(minn=BFS_MIN_TRADES)
 
 
+@query("graph_bfs_reach", oracle=GRAPH_BFS_REACH_ORACLE, tier="local")
 def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-hop BFS REACHABILITY from the graph's hub: starting at the
     highest-degree node of the repeat-trade graph (deterministic

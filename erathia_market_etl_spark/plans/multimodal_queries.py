@@ -1,13 +1,12 @@
 """Multimodal queries over the synthetic media table (extension surface).
 
 All registered entries are oracle-checked: the catalog projection is
-plain SQL; the fake-decoder ops (feature extraction, frame sampling,
-resize pass-through) run the real mapInPandas plumbing with byte-level
-outputs the DuckDB twins reproduce (ASCII payload ⇒ ord() histogram,
-md5(text||'|'||idx) frame fingerprints, md5-pinned resize
-round-trip). Since r6 the REAL codec-free decoders carry evidence too:
+plain SQL; the fake-decoder ops (feature extraction, frame sampling)
+run the real mapInPandas plumbing with byte-level outputs the DuckDB
+twins reproduce (ASCII payload ⇒ ord() histogram, md5(text||'|'||idx)
+frame fingerprints). Since r6 the REAL codec-free decoders carry evidence too:
 media_wav_real_decode (registered) parses synthesized valid WAV
-containers, and media_bmp_real_resize (queued for a free slot) runs
+containers, and media_bmp_real_resize (registered) runs
 the full BMP encode→decode→resample→encode→decode cycle — both
 hash-matched against pure-arithmetic oracles.
 """
@@ -20,7 +19,6 @@ from pyspark.sql import functions as F
 from ..operators.multimodal import (
     extract_features,
     media_table,
-    resize_stub,
     sample_frames,
     wav_decode_stats,
 )
@@ -158,43 +156,6 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(_media(spark, sf_dir), every_n=10).orderBy(
         "media_id", "frame_idx"
     )
-
-
-# Driver slot retired r10 (slot economics — frees the budget that lets
-# r11 register the ohlc_hourly/twap_daily market-data pair): the plan is
-# a strict subset of media_bmp_real_resize's — the identical
-# image-filter → mapInPandas → binary round-trip plumbing, except the
-# staying sibling ALSO decodes, resamples, and re-encodes inside the
-# same pandas loop (registered r8, r8/r10-green). Oracle keeps running
-# locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-MEDIA_RESIZE_PASSTHROUGH_ORACLE = """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           md5(text) AS content_md5,
-           224 AS width, 224 AS height
-    FROM documents
-    WHERE doc_id % 3 = 0
-    ORDER BY media_id
-    """
-
-
-def media_resize_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing under driver check: image payloads cross the
-    Arrow boundary through resize_stub's mapInPandas and come back
-    byte-identical (md5-pinned by the oracle) with metadata rewritten to
-    the target dimensions. The stub leaves bytes unchanged — the real
-    decoder/resampler swaps into the same pandas loop — so what this
-    query proves is the production plumbing: image-only Spark-side
-    filter, batch iteration, binary round-trip fidelity, schema."""
-    out = resize_stub(_media(spark, sf_dir), 224, 224)
-    return out.select(
-        "media_id",
-        F.length("content").cast("bigint").alias("n_bytes"),
-        F.md5("content").alias("content_md5"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-    ).orderBy("media_id")
 
 
 @query(
@@ -382,8 +343,6 @@ def media_bmp_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # media_wav_resample: the audio twin of media_bmp_real_resize — full
 # encode -> decode -> resample -> re-encode -> re-decode cycle.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 WAV_RESAMPLE_N = 48  # fixed-length clip every audio model consumes
@@ -412,6 +371,7 @@ MEDIA_WAV_RESAMPLE_ORACLE = f"""
     """
 
 
+@query("media_wav_resample", oracle=MEDIA_WAV_RESAMPLE_ORACLE, tier="local")
 def media_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio pipeline end-to-end — the PCM twin of
     media_bmp_real_resize: synthesize a VALID PCM16 WAV from the
@@ -495,8 +455,7 @@ def media_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_scene_segments: shot/scene segmentation over sampled frame
-# fingerprints. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# fingerprints.
 # ---------------------------------------------------------------------------
 
 # 24-bit frame energy domain; a jump of more than half the domain
@@ -544,6 +503,11 @@ MEDIA_SCENE_SEGMENTS_ORACLE = f"""
     """
 
 
+@query(
+    "media_scene_segments",
+    oracle=MEDIA_SCENE_SEGMENTS_ORACLE,
+    tier="local",
+)
 def media_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHOT/SCENE segmentation of the video assets — the frame-level
     composition a video-curation pipeline runs before clip extraction:
@@ -602,11 +566,8 @@ def media_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_jpeg_real_decode: driver-grade evidence for the r15 baseline
-# JPEG codec (operators/jpeg.py). PROMOTED to a driver slot r16
-# (VERDICT r15 item 3; one-in-one-out, paid by the agg_having_filter
-# retirement — rationale at its definition site in plans/relational.py):
-# the round's flagship operator carries hash-exact arithmetic-oracle
-# evidence, the strongest promotion case of the ten precedents.
+# JPEG codec (operators/jpeg.py), in the driver tier: the codec
+# carries hash-exact arithmetic-oracle evidence.
 # ---------------------------------------------------------------------------
 
 JPEG_Q = 50  # q50 keeps the Annex K DC step at exactly 16
@@ -701,9 +662,7 @@ def media_jpeg_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_gif_real_decode: driver-grade evidence for the r16 GIF/LZW
-# codec (operators/gif.py). UNREGISTERED (local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK +
-# tests/test_oracle_parity.py). GIF is LOSSLESS for paletted content,
+# codec (operators/gif.py). GIF is LOSSLESS for paletted content,
 # so unlike the JPEG twin no divisibility construction is needed —
 # every synthesized tile round-trips bit-exactly and the oracle
 # predicts the stats from modular arithmetic alone.
@@ -746,6 +705,11 @@ MEDIA_GIF_REAL_DECODE_ORACLE = """
     """
 
 
+@query(
+    "media_gif_real_decode",
+    oracle=MEDIA_GIF_REAL_DECODE_ORACLE,
+    tier="local",
+)
 def media_gif_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-codec decode under driver-style check (r16): each
     selected documents row (doc_id % 3 = 0) synthesizes a paletted

@@ -12,9 +12,6 @@ arithmetic):
   * doubles render as exact CENTS integers (the money.py idiom —
     min/max commute with the monotonic cents transform), never as a
     float-to-string cast.
-
-UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-driver-style evidence via LOCALCHECK).
 """
 
 from __future__ import annotations
@@ -25,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents
 from ..sources.events import load_events
 from ..sources.parquet_io import load_table
+from .registry import query
 
 PROFILE_FACT_COLUMNS_ORACLE = """
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM events)
@@ -77,6 +75,11 @@ PROFILE_FACT_COLUMNS_ORACLE = """
     """
 
 
+@query(
+    "profile_fact_columns",
+    oracle=PROFILE_FACT_COLUMNS_ORACLE,
+    tier="local",
+)
 def profile_fact_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profile of the events fact: one row per column with null
     count, exact distinct count, and deterministically-rendered
@@ -169,8 +172,7 @@ def profile_fact_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # histogram_equi_depth: exact equal-frequency histogram via the
-# distributed rank decomposition. UNREGISTERED (r9 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# distributed rank decomposition.
 # ---------------------------------------------------------------------------
 
 HISTOGRAM_BUCKETS = 10
@@ -196,6 +198,11 @@ HISTOGRAM_EQUI_DEPTH_ORACLE = f"""
     """
 
 
+@query(
+    "histogram_equi_depth",
+    oracle=HISTOGRAM_EQUI_DEPTH_ORACLE,
+    tier="local",
+)
 def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equal-frequency (equi-depth) histogram of lineitem
     quantity in HISTOGRAM_BUCKETS (10) buckets — the statistic
@@ -274,9 +281,7 @@ def equi_depth_frame(
 
 # ---------------------------------------------------------------------------
 # agg_mad_robust: exact per-group median + median-absolute-deviation via
-# the value-histogram rank decomposition. UNREGISTERED (r10 — local-only
-# per the COVERAGE.md standing policy; driver-style evidence via
-# LOCALCHECK).
+# the value-histogram rank decomposition.
 # ---------------------------------------------------------------------------
 
 AGG_MAD_ROBUST_ORACLE = """
@@ -351,6 +356,7 @@ def _lower_median(counts: DataFrame, val: str) -> DataFrame:
     )
 
 
+@query("agg_mad_robust", oracle=AGG_MAD_ROBUST_ORACLE, tier="local")
 def agg_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group dispersion: exact LOWER median and exact median
     absolute deviation (MAD) of the event value in cents, per
@@ -411,8 +417,7 @@ def mad_frame(ev: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_percentile_bands: exact daily P50/P95/max bands per event type via
-# the histogram rank decomposition. UNREGISTERED (r10 — local-only per
-# the COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# the histogram rank decomposition.
 # ---------------------------------------------------------------------------
 
 TS_PERCENTILE_BANDS_ORACLE = """
@@ -458,6 +463,7 @@ TS_PERCENTILE_BANDS_ORACLE = """
     """
 
 
+@query("ts_percentile_bands", oracle=TS_PERCENTILE_BANDS_ORACLE, tier="local")
 def ts_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The daily percentile dashboard: exact P50 / P95 / max of the
     event value per (event_type, day) — the latency/price band series
@@ -527,8 +533,7 @@ def percentile_bands_frame(ev: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # dq_expectations_suite: declarative data-quality checks (dbt-test /
-# Great-Expectations analog). UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# Great-Expectations analog).
 # ---------------------------------------------------------------------------
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -618,6 +623,11 @@ def _check_rows(df, tbl: str, specs: list[tuple[str, object]], checked_col):
     return agg.select(F.explode(F.array(*entries)).alias("e")).select("e.*")
 
 
+@query(
+    "dq_expectations_suite",
+    oracle=DQ_EXPECTATIONS_SUITE_ORACLE,
+    tier="local",
+)
 def dq_expectations_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality expectations over the whole star — the
     dbt-test / Great-Expectations checklist a warehouse runs before
@@ -746,8 +756,6 @@ def dq_expectations_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # agg_weighted_median: exact quantity-weighted median price per flag.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 # $5 price blocks — the TPC-H extendedprice domain is fixed
@@ -785,6 +793,7 @@ AGG_WEIGHTED_MEDIAN_ORACLE = """
     """
 
 
+@query("agg_weighted_median", oracle=AGG_WEIGHTED_MEDIAN_ORACLE, tier="local")
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact QUANTITY-WEIGHTED median unit price per return flag — the
     robust 'typical traded price' statistic (each row votes with its
@@ -841,8 +850,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # privacy_k_anonymity: k-anonymity audit over quasi-identifiers.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 KANON_K = 5  # the audit threshold: groups smaller than k are re-identifiable
@@ -871,6 +878,7 @@ PRIVACY_K_ANONYMITY_ORACLE = f"""
     """
 
 
+@query("privacy_k_anonymity", oracle=PRIVACY_K_ANONYMITY_ORACLE, tier="local")
 def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-ANONYMITY audit (Sweeney 2002) over the customer table's
     quasi-identifier pair (nation, market segment): a row is
@@ -913,8 +921,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_fulfillment_latency: order-to-ship latency SLA bands per
-# priority. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# priority.
 # ---------------------------------------------------------------------------
 
 MART_FULFILLMENT_LATENCY_ORACLE = """
@@ -950,6 +957,11 @@ MART_FULFILLMENT_LATENCY_ORACLE = """
     """
 
 
+@query(
+    "mart_fulfillment_latency",
+    oracle=MART_FULFILLMENT_LATENCY_ORACLE,
+    tier="local",
+)
 def mart_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship FULFILLMENT latency SLA bands per order priority:
     exact nearest-rank P50 / P95 / max of (shipdate - orderdate) in

@@ -1,9 +1,15 @@
-"""Driver-facing query registry.
+"""The query registry.
 
 Every operator from SURVEY.md §2 registers here as a named query: a
-PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (when
-SQL-expressible) a DuckDB-runnable ANSI-SQL oracle over the same parquet
-tables. ``__spark_entry__.py`` exposes the two dicts verbatim.
+PySpark callable ``(spark, sf_dir) -> DataFrame`` plus a DuckDB-runnable
+ANSI-SQL oracle over the same parquet tables. Each query belongs to one
+tier:
+
+  * ``driver`` (the default): exposed verbatim by ``__spark_entry__.py``
+    through ``all_queries()`` / ``all_oracles()``;
+  * ``local``: run only by the local oracle compare
+    (tests/test_oracle_parity.py, tools/localcheck.py) through
+    ``local_queries()``.
 
 Contract (see repo README / driver docs):
   * column names must match between Spark result and oracle result —
@@ -23,20 +29,30 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _T = TypeVar("_T")
 
+# driver tier
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# local tier: name -> (query, oracle)
+LOCAL: dict[str, tuple[QueryFn, str]] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query; ``oracle`` is the DuckDB SQL twin (omit
-    only for genuinely non-SQL-expressible operators)."""
+def query(
+    name: str, oracle: str, tier: str = "driver"
+) -> Callable[[QueryFn], QueryFn]:
+    """Register a named query with its DuckDB SQL twin ``oracle`` in
+    ``tier`` (``"driver"`` or ``"local"``). A name is unique across
+    both tiers."""
+    if tier not in ("driver", "local"):
+        raise ValueError(f"unknown query tier: {tier}")
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in QUERIES:
+        if name in QUERIES or name in LOCAL:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
+        if tier == "driver":
+            QUERIES[name] = fn
             ORACLES[name] = oracle
+        else:
+            LOCAL[name] = (fn, oracle)
         return fn
 
     return deco
@@ -49,9 +65,11 @@ def _load_all() -> None:
         event_windows,
         graph_queries,
         multimodal_queries,
+        profile_queries,
         relational,
         sampling_queries,
         similarity_queries,
+        sketch_queries,
         skew_queries,
         streaming_queries,
         temporal_queries,
@@ -115,10 +133,7 @@ _CHANGED: dict[str, int] = {
     "media_frame_sample": 4,     # SQL-expressible frame fingerprint + oracle
     "sim_similar_pairs": 4,      # new — non-vacuous banded-LSH evidence twin
     "sim_band_recall": 4,        # new — oracled recall@k contract for band-LSH
-    # (media_resize_passthrough's r4 entry removed r11: retired from the
-    # registry in r10, so the entry was dead bookkeeping — r10 ADVICE.
-    # Standing rule: delete a query's _CHANGED entry when its @query
-    # registration is deleted.)
+    # (delete a query's entry when its @query registration is deleted)
     "text_length_trim": 5,  # distributed rank decomposition (r4 VERDICT #1)
     "pack_token_budget_shards": 5,  # hierarchical running sum (r4 VERDICT #2)
     "media_feature_extract": 5,  # oracle hardened: LEFT JOIN + COALESCE (r4 ADVICE)
@@ -232,3 +247,9 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracles() -> dict[str, str]:
     _load_all()
     return _ordered(ORACLES)
+
+
+def local_queries() -> dict[str, tuple[QueryFn, str]]:
+    """The local tier: name -> (query, oracle), sorted by name."""
+    _load_all()
+    return dict(sorted(LOCAL.items()))

@@ -334,22 +334,6 @@ def silver_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["c_custkey"])
 
 
-# Driver slot retired r5 (slot economics: one in, one out for
-# text_repetition_signals/text_pii_scrub — r4 VERDICT "Next round"
-# intro). The plan is a strict subset shape of distinct_projection_sorted
-# (hash-aggregate distinct over a pruned 2-column scan) and the dedup
-# family claim is carried by dedup_exact_hash/silver_dedup_by_key; the
-# oracle still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-DISTINCT_ROWS_ORACLE = "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"
-
-
-def dedup_distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-row dedup over genuinely duplicated data — hash-aggregate
-    semantics, deterministic regardless of which physical row survives."""
-    return T(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").dropDuplicates()
-
-
 # ---------------------------------------------------------------------------
 # Projections / filters (P5-P8)
 # ---------------------------------------------------------------------------
@@ -404,29 +388,6 @@ def filter_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_brand") == F.lit(param))
         .select("p_partkey", "p_name", "p_brand")
         .orderBy("p_partkey")
-    )
-
-
-# Driver slot retired r15 (slot economics: one in, one out for the
-# text_dedup_span_removal promotion — VERDICT r14 item 6). Strict
-# subset: both aggregates are contained in registered siblings over the
-# SAME table — COUNT(*) is q1/q3/agg_grouping_sets' n_rows and
-# COUNT(DISTINCT) is agg_distinct_aggregates' distinct_parts (whose
-# ungrouped case is agg_grouping_sets' () grouping set). The §2 S13 row
-# keeps driver-style evidence through the retired-query compare in
-# tests/test_oracle_parity.py and the per-round LOCALCHECK sweep.
-COUNT_PROBE_ORACLE = (
-    "SELECT COUNT(*) AS row_count, "
-    "COUNT(DISTINCT l_orderkey) AS order_count FROM lineitem"
-)
-
-
-def count_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S13 row-count verification probe (silver_processor.py:88-93),
-    plus a distinct count the reference lacks (SURVEY §2.4 gap)."""
-    return T(spark, sf_dir, "lineitem").agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.countDistinct("l_orderkey").alias("order_count"),
     )
 
 
@@ -765,37 +726,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AGG_CUBE_ORACLE = """
-    SELECT o_orderstatus, o_orderpriority,
-           COUNT(*) AS n_orders,
-           ROUND(SUM(CAST(o_totalprice AS DECIMAL(38,12))), 2)::DOUBLE AS sum_total
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """
-
-
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full cube over two keys.
-
-    Driver slot retired r13 (one-in-one-out: paid for the
-    mart_revenue_gini registration — VERDICT r12 item 3). Strict-subset
-    rationale: CUBE plans as the same Expand + two-phase aggregate
-    physical shape as the staying agg_grouping_sets (the general form,
-    which additionally attests GROUPING() subtotal-flag semantics) and
-    agg_rollup (headline-bench, frozen-baseline); cube differs only in
-    WHICH grouping sets Expand enumerates. Oracle still runs via
-    tests/test_oracle_parity.py::test_retired_queries_still_match and
-    tools/localcheck.py each round."""
-    return (
-        T(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             money_sum_cents(cents("o_totalprice")).alias("sum_total"))
-        .orderBy(F.asc_nulls_first("o_orderstatus"), F.asc_nulls_first("o_orderpriority"))
-    )
-
-
 @query(
     "agg_stats_profile",
     oracle="""
@@ -838,41 +768,6 @@ def agg_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sorts / top-k (O1-O5)
 # ---------------------------------------------------------------------------
 
-# Driver slot retired r8 (slot economics: freed one of the two r9
-# slots the last queued registrations — pack_context_windows and
-# emb_label_centroids — need). Strict-subset rationale: the O4
-# physical shape this pinned (hash agg + TakeOrderedAndProject, never
-# a global sort) stays driver-green through q3_top_customers (same
-# top-k operator over the broadcast-join superset plan) and
-# topk_per_group (the WindowGroupLimit variant); the plan pin itself
-# stays in tests/test_plan_shapes.py::
-# test_topk_uses_take_ordered_not_global_sort and the oracle still
-# runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-TOPK_PARTS_ORACLE = """
-    SELECT l_partkey,
-           ROUND(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(38,12))), 2)::DOUBLE AS revenue
-    FROM lineitem
-    GROUP BY l_partkey
-    ORDER BY revenue DESC, l_partkey
-    LIMIT 10
-    """
-
-
-def topk_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O4 top-k: ORDER BY + LIMIT plans as TakeOrderedAndProject (no
-    global sort — per-partition heaps, then a driver merge of k rows)."""
-    return (
-        T(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(money_sum_cents(cents("l_extendedprice") * (100 - cents("l_discount")), 4)
-             .alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_partkey"))
-        .limit(10)
-    )
-
-
 TOPK_PER_GROUP_ORACLE = """
     SELECT l_returnflag, l_partkey, revenue, rn FROM (
         SELECT l_returnflag, l_partkey,
@@ -892,24 +787,16 @@ TOPK_PER_GROUP_ORACLE = """
     """
 
 
+@query("topk_per_group", oracle=TOPK_PER_GROUP_ORACLE, tier="local")
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k PER GROUP (vs the global top-k of O4): aggregate, then
     row_number over a per-group window, filter rn <= k. Spark pushes the
     rn <= 3 limit into the window sort (WindowGroupLimit) — each
     partition keeps a 3-element heap instead of fully sorting.
 
-    Driver slot retired r13 (one-in-one-out: paid for the
-    events_peak_concurrency registration — VERDICT r12 item 3).
-    Strict-subset rationale: the hash-agg half is the most common shape
-    in the registry, and the WindowGroupLimit rank-cut half is exactly
-    the kernel the staying sim_topk_batch runs (and pins in
-    tests/test_plan_shapes.py) per qid over the probe join — this query
-    adds no physical operator the registered set doesn't already
-    attest. The low-cardinality-partition-key discipline note stays
-    pinned in tests/test_plan_shapes.py (the pin reads the function,
-    not the registration). Oracle still runs via
-    tests/test_oracle_parity.py::test_retired_queries_still_match and
-    tools/localcheck.py each round."""
+    Local tier: it is the low-cardinality-partition-key case (3 groups)
+    of the two-phase WindowGroupLimit pin in
+    tests/test_plan_shapes.py."""
     from pyspark.sql import Window
 
     rev = exact_sum(dec2("l_extendedprice") * (1 - dec2("l_discount")))
@@ -982,73 +869,6 @@ def scd2_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Set operations (SURVEY §2.7 — absent in reference, engine surface)
 # ---------------------------------------------------------------------------
 
-# Driver slots retired r7 (slot economics: one out per query added —
-# paid for the text_quality_gate / bm25_topk_postings registrations and
-# the r7 kernel-selection re-attestations). Each is a strict-subset
-# plan shape of a staying driver-green sibling: union+distinct ⊂
-# setop_union_by_name_missing's evolution-union + the distinct
-# aggregate of distinct_projection_sorted; INTERSECT (set) ⊂
-# setop_intersect_all_bag (the bag variant adds multiplicity
-# arithmetic over the same left-semi shape). Oracles keep running in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SETOP_UNION_DISTINCT_ORACLE = """
-    SELECT c_nationkey AS nationkey FROM customer
-    UNION
-    SELECT s_nationkey AS nationkey FROM supplier
-    ORDER BY nationkey
-    """
-
-
-def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = T(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.union(s).distinct().orderBy("nationkey")
-
-
-SETOP_INTERSECT_ORACLE = """
-    SELECT c_nationkey AS nationkey FROM customer
-    INTERSECT
-    SELECT s_nationkey AS nationkey FROM supplier
-    ORDER BY nationkey
-    """
-
-
-def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = T(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s).orderBy("nationkey")
-
-
-# Driver slot retired r8 (slot economics: paid for the
-# pipeline_training_funnel / sim_pq_quality registrations, per the
-# retirement order documented in COVERAGE.md since r7). Strict-subset
-# rationale: EXCEPT (set difference) plans as the same left-anti +
-# distinct shape whose multiplicity superset setop_except_all_bag keeps
-# driver-green; the oracle still runs through the driver's own compare
-# in tests/test_oracle_parity.py::test_retired_queries_still_match.
-SETOP_EXCEPT_ORACLE = """
-    SELECT c_nationkey AS nationkey FROM customer
-    EXCEPT
-    SELECT s_nationkey AS nationkey FROM supplier WHERE s_suppkey <= 20
-    ORDER BY nationkey
-    """
-
-
-def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # subtract == EXCEPT DISTINCT (set difference); exceptAll would be the
-    # bag-difference variant, which SQL EXCEPT is not. The right side is
-    # restricted to the first 20 suppliers so the difference is NON-EMPTY
-    # at every fixture SF (unrestricted, both tables cover all 25 nations
-    # and the green row is a vacuous 0 = 0 — the evidence anti-pattern r3
-    # VERDICT item 3 called out on sim_near_dup_pairs).
-    c = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = (
-        T(spark, sf_dir, "supplier")
-        .filter(F.col("s_suppkey") <= 20)
-        .select(F.col("s_nationkey").alias("nationkey"))
-    )
-    return c.subtract(s).orderBy("nationkey")
-
 
 @query(
     "setop_except_all_bag",
@@ -1069,33 +889,6 @@ def setop_except_all_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = T(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return (
         c.exceptAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("nationkey")
-    )
-
-
-# Driver slot retired r12 (one-in-one-out: paid for the
-# graph_pagerank_influence registration — VERDICT r11 item 5).
-# Strict-subset rationale: the plan is setop_except_all_bag's with the
-# set operator swapped (same scan/agg/exchange inventory); the staying
-# sibling keeps the bag-semantics shape driver-green. The oracle still
-# runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SETOP_INTERSECT_ALL_BAG_ORACLE = """
-    SELECT nationkey, COUNT(*) AS n FROM (
-        SELECT c_nationkey AS nationkey FROM customer
-        INTERSECT ALL
-        SELECT s_nationkey AS nationkey FROM supplier
-    ) GROUP BY nationkey ORDER BY nationkey
-    """
-
-
-def setop_intersect_all_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL keeps min(multiplicity_left, multiplicity_right)
-    copies per value — intersectAll."""
-    c = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = T(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return (
-        c.intersectAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
         .orderBy("nationkey")
     )
 
@@ -1142,42 +935,6 @@ def scalar_date_smart_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-# Driver slot retired r12 (one-in-one-out: paid for the
-# funnel_ordered_conversion registration — VERDICT r11 item 5).
-# Strict-subset rationale: every scalar it exercises (UPPER/SUBSTR/
-# LENGTH/CONCAT/CASE banding) also runs driver-green inside
-# scalar_string_extended and q1's flag derivation. The oracle still
-# runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SCALAR_STRING_KIT_ORACLE = """
-    SELECT c_custkey,
-           UPPER(c_name) AS name_upper,
-           SUBSTR(c_name, 1, 8) AS name_prefix,
-           LENGTH(c_name) AS name_len,
-           CONCAT(c_mktsegment, ' ', c_name) AS segment_name,
-           CASE WHEN c_acctbal < 0 THEN 'debt'
-                WHEN c_acctbal < 5000 THEN 'standard'
-                ELSE 'vip' END AS balance_band
-    FROM customer
-    ORDER BY c_custkey
-    """
-
-
-def scalar_string_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6-F9: string concat, casing, substring, length, multi-branch
-    CASE WHEN banding."""
-    return T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.upper("c_name").alias("name_upper"),
-        F.substring("c_name", 1, 8).alias("name_prefix"),
-        F.length("c_name").alias("name_len"),
-        F.concat_ws(" ", "c_mktsegment", "c_name").alias("segment_name"),
-        F.when(F.col("c_acctbal") < 0, "debt")
-        .when(F.col("c_acctbal") < 5000, "standard")
-        .otherwise("vip").alias("balance_band"),
-    ).orderBy("c_custkey")
-
-
 @query(
     "subquery_correlated_above_avg",
     oracle="""
@@ -1212,46 +969,6 @@ def subquery_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(dec2("p_retailprice") * F.col("n") > F.col("s"))
         .select("p_partkey", "p_brand", F.col("p_retailprice").alias("retail_price"))
         .orderBy("p_partkey")
-    )
-
-
-# Driver slot retired r16 (slot economics: one in, one out for the
-# media_jpeg_real_decode promotion — VERDICT r15 item 3). Strict
-# subset: the plain single-table hash agg (count/min/max per group +
-# sort on the group key) is the shape of registered siblings
-# agg_distinct_aggregates / agg_grouping_sets / agg_stats_profile, and
-# the distinguishing Filter-above-Aggregate (HAVING) sits in the
-# staying dedup_corpus_representatives oracle (GROUP BY a HAVING
-# MIN(b) < a) and pipeline_training_funnel's non-reps stage — Catalyst
-# plans all of these as the same Filter node above Aggregate. Keeps
-# driver-style evidence through the retired-query compare in
-# tests/test_oracle_parity.py and the per-round LOCALCHECK sweep.
-AGG_HAVING_FILTER_ORACLE = """
-    SELECT p_brand,
-           COUNT(*) AS n_parts,
-           MIN(p_size) AS min_size,
-           MAX(p_size) AS max_size
-    FROM part
-    GROUP BY p_brand
-    HAVING COUNT(*) >= 5 AND MAX(p_size) > 25
-    ORDER BY p_brand
-    """
-
-
-def agg_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING: post-aggregation predicate — in DataFrame terms just a
-    filter above the agg (Catalyst keeps it there; it can't push below
-    the groupBy because it references aggregates)."""
-    return (
-        T(spark, sf_dir, "part")
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.min("p_size").alias("min_size"),
-            F.max("p_size").alias("max_size"),
-        )
-        .filter((F.col("n_parts") >= 5) & (F.col("max_size") > 25))
-        .orderBy("p_brand")
     )
 
 
@@ -1508,8 +1225,6 @@ def setop_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_rfm_segments: quartile RFM customer segmentation over orders.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 MART_RFM_SEGMENTS_ORACLE = """
@@ -1541,6 +1256,7 @@ MART_RFM_SEGMENTS_ORACLE = """
     """
 
 
+@query("mart_rfm_segments", oracle=MART_RFM_SEGMENTS_ORACLE, tier="local")
 def mart_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation —
     the classic CRM mart: per customer the last order date, order
@@ -1630,9 +1346,7 @@ def mart_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# skyline_part_frontier: 2-D skyline / Pareto frontier. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# skyline_part_frontier: 2-D skyline / Pareto frontier.
 # ---------------------------------------------------------------------------
 
 SKYLINE_BLOCK_CENTS = 500  # $5 price blocks; TPC-H price domain is fixed
@@ -1661,6 +1375,11 @@ SKYLINE_PART_FRONTIER_ORACLE = """
     """
 
 
+@query(
+    "skyline_part_frontier",
+    oracle=SKYLINE_PART_FRONTIER_ORACLE,
+    tier="local",
+)
 def skyline_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D SKYLINE (Pareto frontier) over parts: every part such that
     no other part is both cheaper-or-equal AND smaller-or-equal with at
@@ -1736,12 +1455,6 @@ def skyline_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_revenue_gini: revenue-concentration (Gini / Lorenz) mart.
-# r12 local-only (LOCALCHECK green both SFs); REGISTERED r14 exactly as
-# staged in r13 (VERDICT r12 item 3, the r10->r11 ohlc/twap sequencing
-# precedent): the slot was pre-paid by the r13 agg_cube retirement, so
-# r14's budget is 48 aged r12 greens + 2 never-green (this one and
-# mart_pareto_concentration, paid by the r14 text_quality_score
-# retirement) = the driver's 50 slots with zero displacement.
 # ---------------------------------------------------------------------------
 
 # $1k lifetime-spend blocks; the TPC-H-ish per-customer lifetime spend
@@ -1871,9 +1584,7 @@ def mart_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_pareto_concentration: the 80/20 point of the revenue Lorenz
-# curve. r12 local-only; PROMOTED to a driver slot in r14 (VERDICT r13
-# item 8 — one-in-one-out, paid by the text_quality_score retirement in
-# plans/text_queries.py): it is the only consumer of the
+# curve. In the driver tier because it is the only consumer of the
 # operators/rank.py grouped_prefix_sum block decomposition reachable by
 # the driver, so promoting it puts BOTH rank-decomposition kernels
 # (grouped_rank via mart_revenue_gini, grouped_prefix_sum here) under

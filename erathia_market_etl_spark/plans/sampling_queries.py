@@ -40,78 +40,6 @@ def _bucket_sql(col: str, salt: int = 0) -> str:
     return f"(({col} % {_FOLD}) * {_KNUTH} + {salt}) % {_MOD32} % 100"
 
 
-# Driver slot retired r5 (slot economics: one in, one out for
-# text_repetition_signals/text_pii_scrub). The bucket arithmetic is the
-# SAME expression sample_mixture_weighted and sample_stratified_by keep
-# driver-green (and tests/test_sampling.py property-tests); the oracle
-# still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SPLIT_ASSIGN_ORACLE = f"""
-    SELECT doc_id,
-           {_bucket_sql('doc_id')} AS bucket,
-           CASE WHEN {_bucket_sql('doc_id')} < 80 THEN 'train'
-                WHEN {_bucket_sql('doc_id')} < 90 THEN 'validation'
-                ELSE 'test' END AS split
-    FROM documents
-    ORDER BY doc_id
-    """
-
-
-def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/validation/test split by hashed
-    doc_id. Narrow (no shuffle): the assignment is a map-side expression,
-    so splitting 100 TB costs one scan and writers can partitionBy(split)."""
-    docs = load_table(spark, sf_dir, "documents")
-    b = _bucket(F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        b.alias("bucket"),
-        F.when(b < 80, "train").when(b < 90, "validation").otherwise("test").alias("split"),
-    ).orderBy("doc_id")
-
-
-# Driver slot retired r8 (slot economics: paid for the sim_pq_quality /
-# pipeline_training_funnel registrations). Strict-subset rationale: the
-# per-source keep-rate decision is the SAME salted Knuth-hash bucket
-# expression sample_stratified_by keeps driver-green (that query adds
-# per-stratum fractions over the identical arithmetic); the oracle
-# still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SAMPLE_MIXTURE_ORACLE = f"""
-    WITH t AS (
-        SELECT source,
-               100 - 4 * CAST(regexp_extract(source, 'src(\\d+)', 1) AS BIGINT) AS rate_pct,
-               {_bucket_sql('doc_id', 7919)} AS b
-        FROM documents
-    )
-    SELECT source, rate_pct,
-           COUNT(*) AS n_total,
-           CAST(SUM(CASE WHEN b < rate_pct THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-    FROM t
-    GROUP BY source, rate_pct
-    ORDER BY source
-    """
-
-
-def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture downsampling: each source gets a target keep-rate
-    (here derived from its numeric suffix; production passes a dict) and
-    rows survive when their salted hash bucket falls under it. The keep
-    decision is again map-side; only the per-source report aggregates."""
-    docs = load_table(spark, sf_dir, "documents")
-    rate = 100 - 4 * F.regexp_extract("source", r"src(\d+)", 1).cast("long")
-    b = _bucket(F.col("doc_id"), salt=7919)
-    return (
-        docs.select("source", rate.alias("rate_pct"), b.alias("b"))
-        .groupBy("source", "rate_pct")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("b") < F.col("rate_pct"), 1).otherwise(0)).alias("n_kept"),
-        )
-        .orderBy("source")
-    )
-
-
 @query(
     "text_token_frequencies",
     oracle="""
@@ -155,11 +83,6 @@ _CONTEXT_LEN = 512  # tokens per fixed training context window
 
 # ---------------------------------------------------------------------------
 # pack_context_windows: fixed-length context-window packing accounting.
-# Registered r9 (paid for by r8's retirements of window_moving_frame and
-# topk_parts_by_revenue — 48 aged greens + the two queued registrations
-# = the exact 50-slot budget, per the COVERAGE.md standing policy; this
-# completes the queue and brings the registry to its 100-query steady
-# state). Locally oracled since r7.
 # ---------------------------------------------------------------------------
 
 PACK_CONTEXT_WINDOWS_ORACLE = f"""
@@ -449,8 +372,7 @@ def sample_stratified_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be reproducible run-to-run, machine-to-machine, and under any
     repartitioning, and sampleBy's seeded rand() is none of those
     (its draw order follows partition layout — r3 VERDICT item 1a).
-    Same salted-bucket technique as sample_mixture_weighted; the keep
-    decision is a narrow map-side expression, only the per-stratum
+    The keep decision is a narrow map-side expression, only the per-stratum
     report aggregates. Machine-independence pinned in
     tests/test_sampling.py."""
     docs = load_table(spark, sf_dir, "documents")
@@ -515,9 +437,6 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_temperature_mixture: temperature-based data-mixing weights.
-# UNREGISTERED (r8, local-only past the registry ceiling — COVERAGE.md
-# standing policy; oracle parity runs in
-# tests/test_oracle_parity.py::test_queued_queries_match).
 # ---------------------------------------------------------------------------
 
 # Temperature tau = 0.5, i.e. weight = n_tokens^0.5 = sqrt(n_tokens).
@@ -553,6 +472,11 @@ SAMPLE_TEMPERATURE_MIXTURE_ORACLE = f"""
     """
 
 
+@query(
+    "sample_temperature_mixture",
+    oracle=SAMPLE_TEMPERATURE_MIXTURE_ORACLE,
+    tier="local",
+)
 def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture weighting (the Gopher / LLaMA data-mix
     recipe): per source, weight = n_tokens^tau with tau = 0.5, so
@@ -600,8 +524,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_leakage_safe_splits: split assignment hashed on the NEAR-DUP
-# COMPONENT, not the document. UNREGISTERED (r8 queue — local-only per
-# the COVERAGE.md standing policy).
+# COMPONENT, not the document.
 # ---------------------------------------------------------------------------
 
 def _leakage_safe_oracle() -> str:
@@ -636,6 +559,11 @@ def _leakage_safe_oracle() -> str:
     """
 
 
+@query(
+    "sample_leakage_safe_splits",
+    oracle=_leakage_safe_oracle(),
+    tier="local",
+)
 def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/validation/test assignment that cannot leak near-
     duplicates across splits: hash the near-dup COMPONENT id (LSH
@@ -644,9 +572,9 @@ def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     each duplicate cluster's members outside train — the classic
     contamination path (Lee et al. 2021 measured test-set dup rates;
     group-wise splitting is the fix every serious pipeline applies).
-    Same Knuth bucket arithmetic and 80/10/10 cut as
-    sample_split_assign, so the two queries differ ONLY in what gets
-    hashed — the leakage-safety is isolated and auditable.
+    The Knuth bucket arithmetic and 80/10/10 cut are those of a naive
+    doc_id split; only what gets hashed differs — the leakage-safety
+    is isolated and auditable.
 
     At scale: the component labels are the dedup pipeline's existing
     byproduct (amortized); this query adds one keys-only left join and
@@ -679,8 +607,6 @@ def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_k_per_group: deterministic fixed-size per-group sample.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 SAMPLE_K_PER_GROUP = 5
@@ -705,13 +631,14 @@ SAMPLE_K_PER_GROUP_ORACLE = f"""
     """
 
 
+@query("sample_k_per_group", oracle=SAMPLE_K_PER_GROUP_ORACLE, tier="local")
 def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fixed-size sample of SAMPLE_K_PER_GROUP (5)
     documents per source — the "give me k examples from every stratum"
     primitive (eval-set construction, per-source spot checks, UI
     previews). Rows are ordered within each group by the salted
-    deterministic hash bucket (the sample_split_assign machinery, a
-    different salt), so the sample is uniform-ish, REPRODUCIBLE across
+    deterministic hash bucket (the ``_bucket`` machinery with its own
+    salt), so the sample is uniform-ish, REPRODUCIBLE across
     runs and engines (rand() is lint-banned), and STABLE under corpus
     growth in the sense that a document's sort key never changes —
     only boundary membership can shift.
@@ -735,8 +662,6 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_quota_allocation: Hamilton largest-remainder budget allocation.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 QUOTA_BUDGET = 997  # docs to sample corpus-wide (prime: real remainders)
@@ -769,6 +694,11 @@ SAMPLE_QUOTA_ALLOCATION_ORACLE = f"""
     """
 
 
+@query(
+    "sample_quota_allocation",
+    oracle=SAMPLE_QUOTA_ALLOCATION_ORACLE,
+    tier="local",
+)
 def sample_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamilton (largest-remainder) apportionment of a fixed sampling
     budget across corpus strata, weighted by total characters — the
@@ -844,9 +774,7 @@ def quota_frame(w: DataFrame, budget: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # pack_binpack_ffd: first-fit-decreasing sequence packing — the greedy
 # bin-packing pass training pipelines run to pack documents into
-# fixed-token context windows with minimal padding. UNREGISTERED (r11 —
-# local-only per the COVERAGE.md standing policy; driver-style evidence
-# via LOCALCHECK).
+# fixed-token context windows with minimal padding.
 # ---------------------------------------------------------------------------
 
 PACK_FFD_CAP = 128    # bin capacity in tokens (the context length)
@@ -907,6 +835,7 @@ PACK_BINPACK_FFD_ORACLE = f"""
     """
 
 
+@query("pack_binpack_ffd", oracle=PACK_BINPACK_FFD_ORACLE, tier="local")
 def pack_binpack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST-FIT-DECREASING bin packing of documents into
     PACK_FFD_CAP-token context windows, per source — THE standard
@@ -983,8 +912,7 @@ def pack_binpack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_systematic_interval: systematic (every k-th) sampling in a
-# deterministic hash order. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# deterministic hash order.
 # ---------------------------------------------------------------------------
 
 SYSTEMATIC_K = 7  # keep every 7th document
@@ -1016,13 +944,18 @@ SAMPLE_SYSTEMATIC_ORACLE = f"""
     """
 
 
+@query(
+    "sample_systematic_interval",
+    oracle=SAMPLE_SYSTEMATIC_ORACLE,
+    tier="local",
+)
 def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SYSTEMATIC sampling — keep every SYSTEMATIC_K-th document in a
     deterministic pseudo-random order (the salted Knuth bucket, with
     doc_id composed in as the total-order tiebreak): the
     equal-interval design survey statisticians use when a stream
     should be thinned at an exact 1/k rate — unlike the Bernoulli
-    hash-bucket splits (sample_split_assign), the kept count per k
+    hash-bucket splits (sample_leakage_safe_splits), the kept count per k
     consecutive ordered rows is EXACTLY one, so the rate holds in
     every window, not just in expectation. The hash order stands in
     for the 'random start' of textbook systematic sampling while
@@ -1071,8 +1004,7 @@ def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # exp_assignment_srm: deterministic experiment assignment + sample-ratio
-# -mismatch audit. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# -mismatch audit.
 # ---------------------------------------------------------------------------
 
 # (variant, weight in percent) — weights sum to 100; CASE arms below
@@ -1125,6 +1057,7 @@ def _exp_srm_oracle() -> str:
 EXP_ASSIGNMENT_SRM_ORACLE = _exp_srm_oracle()
 
 
+@query("exp_assignment_srm", oracle=EXP_ASSIGNMENT_SRM_ORACLE, tier="local")
 def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic experiment (A/B/n) assignment plus the
     SAMPLE-RATIO-MISMATCH audit every experimentation platform runs
@@ -1189,8 +1122,7 @@ def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # exp_variant_conversion: the experiment readout on top of the
-# deterministic assignment. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# deterministic assignment.
 # ---------------------------------------------------------------------------
 
 
@@ -1229,6 +1161,11 @@ def _exp_conversion_oracle() -> str:
 EXP_VARIANT_CONVERSION_ORACLE = _exp_conversion_oracle()
 
 
+@query(
+    "exp_variant_conversion",
+    oracle=EXP_VARIANT_CONVERSION_ORACLE,
+    tier="local",
+)
 def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The experiment READOUT on top of exp_assignment_srm's
     deterministic arms: per variant, users, purchase converters,
@@ -1285,8 +1222,6 @@ def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_shuffle_order: deterministic global training-order shuffle.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 SHUFFLE_N_SHARDS = 16          # data-parallel worker count
@@ -1317,6 +1252,11 @@ def _shuffle_order_oracle() -> str:
 SAMPLE_SHUFFLE_ORDER_ORACLE = _shuffle_order_oracle()
 
 
+@query(
+    "sample_shuffle_order",
+    oracle=SAMPLE_SHUFFLE_ORDER_ORACLE,
+    tier="local",
+)
 def sample_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic GLOBAL TRAINING-ORDER shuffle — the epoch
     permutation every data loader needs: each document's position is

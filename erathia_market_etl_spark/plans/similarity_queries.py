@@ -748,8 +748,7 @@ def sim_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-band bucket-size profile + truncation accounting — the
-    overflow-reporting twin of sim_near_dup_pairs (same role
-    dedup_lsh_bucket_stats plays for MinHash): per band, bucket count,
+    overflow-reporting twin of sim_near_dup_pairs: per band, bucket count,
     the largest bucket, and exactly what the {MAX_SIGN_BUCKET}-cap
     would drop, so skew degrades recall visibly. Two hash aggregations
     over the (id, band) table; embeddings never shuffle."""
@@ -763,12 +762,6 @@ def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_label_centroids: distributed per-group embedding centroids.
-# Registered r9 (the last of the rotation queue, alongside
-# pack_context_windows — r8 retired window_moving_frame and
-# topk_parts_by_revenue specifically so r9 inherits 48 aged greens +
-# these two never-green registrations = the exact 50-slot budget; the
-# registry is now at its documented 100-query steady state and the
-# queue is empty). Locally oracled since r7.
 # ---------------------------------------------------------------------------
 
 EMB_DIM = 64  # fixture embedding dimensionality
@@ -838,8 +831,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sim_pq_quality: product-quantization quality contract.
-# Registered r8 (paid for by the topk_parts_by_revenue retirement —
-# COVERAGE.md rotation-budget section; locally oracled since r7).
 # ---------------------------------------------------------------------------
 
 PQ_SHORTLIST = 100       # ADC shortlist size fed to exact re-rank
@@ -992,8 +983,7 @@ def sim_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_ivfpq_topk: the composed IVF + PQ retrieval pipeline — the ANN
 # shape that actually runs at 100 TB (FAISS IVFPQ / SPANN family:
 # coarse cells prune the corpus, 8-byte codes prune the scan, exact
-# re-rank fixes the shortlist). UNREGISTERED (r8 queue, after the two
-# text_* r8 additions; one-in-one-out per the COVERAGE.md policy).
+# re-rank fixes the shortlist).
 # ---------------------------------------------------------------------------
 
 IVFPQ_SHORTLIST = 64      # ADC shortlist fed to exact re-rank
@@ -1018,6 +1008,27 @@ SIM_IVFPQ_TOPK_ORACLE = f"""
     """
 
 
+def _ivfpq_oracle() -> str:
+    # recall_hits values measured r13 (deterministic per fixture —
+    # repeat-run verified), pinned behind the corpus fingerprint like
+    # the sim_pq_quality oracle
+    return SIM_IVFPQ_TOPK_ORACLE.format(
+        ivf_cte=_IVF_CTE,
+        n_probe=N_PROBE,
+        query_vec_id=QUERY_VEC_ID,
+        fingerprint_cte=_EMB_FINGERPRINT_CTE,
+        recall_case=_sig_case(
+            {_EMB_SIG_SF0001: 10, _EMB_SIG_SF001: 8, _EMB_SIG_SF01: 6,
+             _EMB_SIG_SF1SYN: 2}
+        ),
+        recall_ok_case=_sig_case_bool(
+            {_EMB_SIG_SF0001: True, _EMB_SIG_SF001: True,
+             _EMB_SIG_SF01: True, _EMB_SIG_SF1SYN: False}
+        ),
+    )
+
+
+@query("sim_ivfpq_topk", oracle=_ivfpq_oracle(), tier="local")
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed retrieval, one contract row. The pipeline: the
     deterministic 16-cell coarse quantizer (same argmax-over-broadcast
@@ -1120,30 +1131,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_oracle() -> str:
-    # recall_hits values measured r13 (deterministic per fixture —
-    # repeat-run verified), pinned behind the corpus fingerprint like
-    # the sim_pq_quality oracle
-    return SIM_IVFPQ_TOPK_ORACLE.format(
-        ivf_cte=_IVF_CTE,
-        n_probe=N_PROBE,
-        query_vec_id=QUERY_VEC_ID,
-        fingerprint_cte=_EMB_FINGERPRINT_CTE,
-        recall_case=_sig_case(
-            {_EMB_SIG_SF0001: 10, _EMB_SIG_SF001: 8, _EMB_SIG_SF01: 6,
-             _EMB_SIG_SF1SYN: 2}
-        ),
-        recall_ok_case=_sig_case_bool(
-            {_EMB_SIG_SF0001: True, _EMB_SIG_SF001: True,
-             _EMB_SIG_SF01: True, _EMB_SIG_SF1SYN: False}
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # dedup_semantic_cells: SemDeDup (Abbas et al. 2023, arXiv:2303.09540 —
-# semantic deduplication via k-means cluster bucketing). UNREGISTERED
-# (r8 queue — local-only per the COVERAGE.md standing policy).
+# semantic deduplication via k-means cluster bucketing).
 # r9: the cell count is now the paper's ~sqrt(n) regime by default
 # (VERDICT r8 item 3 — at sf0.1 the fixed-16-cell configuration's
 # 128-doc cap was BINDING, ~312 members/cell, silently dropping
@@ -1270,6 +1260,11 @@ def semantic_cell_pairs(
     )
 
 
+@query(
+    "dedup_semantic_cells",
+    oracle=DEDUP_SEMANTIC_CELLS_ORACLE,
+    tier="local",
+)
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: semantic near-dup pairs via k-means cell bucketing —
     assign every embedding to its nearest coarse centroid (the
@@ -1309,8 +1304,6 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_random_projection: Johnson-Lindenstrauss sign projection 64 -> 16.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 JL_DIM = 16
@@ -1351,6 +1344,11 @@ EMB_RANDOM_PROJECTION_ORACLE = f"""
     """
 
 
+@query(
+    "emb_random_projection",
+    oracle=EMB_RANDOM_PROJECTION_ORACLE,
+    tier="local",
+)
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction 64 -> JL_DIM (16)
     by a deterministic ±1 sign matrix (Achlioptas 2003's database-
@@ -1404,8 +1402,7 @@ def jl_projection_rows(emb: DataFrame, dim: int = JL_DIM) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sim_topk_jl_rerank: JL-shortlist retrieval — the third pruning
-# composition next to IVF and IVF+PQ. UNREGISTERED (r9 — local-only per
-# the COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# composition next to IVF and IVF+PQ.
 # ---------------------------------------------------------------------------
 
 JL_RETRIEVAL_DIM = 32   # retrieval wants finer geometry than the 16-d
@@ -1455,6 +1452,7 @@ SIM_TOPK_JL_RERANK_ORACLE = f"""
     """
 
 
+@query("sim_topk_jl_rerank", oracle=SIM_TOPK_JL_RERANK_ORACLE, tier="local")
 def sim_topk_jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL-shortlist retrieval: project corpus + query to
     JL_RETRIEVAL_DIM (32) exact-integer coordinates
@@ -1519,8 +1517,6 @@ def sim_topk_jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_int8_quantization: scalar int8 embedding-compression audit.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 EMB_INT8_QUANTIZATION_ORACLE = f"""
@@ -1555,6 +1551,11 @@ EMB_INT8_QUANTIZATION_ORACLE = f"""
     """.format(dim=64)
 
 
+@query(
+    "emb_int8_quantization",
+    oracle=EMB_INT8_QUANTIZATION_ORACLE,
+    tier="local",
+)
 def emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar int8 quantization audit over the embedding corpus — the
     4x-compression step (float32 -> int8, per-vector absmax scale)
@@ -1663,8 +1664,6 @@ def int8_quantization_frame(emb: DataFrame, dim: int) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_kmeans_lloyd: fully-distributed exact-integer Lloyd k-means.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 K_CLUSTERS = 8     # Lloyd cluster count (first-K deterministic seeding)
@@ -1753,6 +1752,7 @@ def _lloyd_oracle() -> str:
 EMB_KMEANS_LLOYD_ORACLE = _lloyd_oracle()
 
 
+@query("emb_kmeans_lloyd", oracle=EMB_KMEANS_LLOYD_ORACLE, tier="local")
 def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully-DISTRIBUTED Lloyd k-means over the embedding corpus,
     LLOYD_ROUNDS (2) unrolled assign→update cycles + a final
@@ -1879,8 +1879,7 @@ def kmeans_lloyd_frame(
 
 # ---------------------------------------------------------------------------
 # emb_rank_normalize: per-dimension rank (quantile) normalization of
-# the embedding matrix. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# the embedding matrix.
 # ---------------------------------------------------------------------------
 
 EMB_RANK_NORMALIZE_ORACLE = """
@@ -1912,6 +1911,7 @@ EMB_RANK_NORMALIZE_ORACLE = """
     """
 
 
+@query("emb_rank_normalize", oracle=EMB_RANK_NORMALIZE_ORACLE, tier="local")
 def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension RANK (quantile) normalization of the embedding
     matrix — the heavy-tail-robust feature prep (each dimension's
@@ -1966,8 +1966,7 @@ def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_pca_power_iteration: top principal direction via two distributed
-# power-iteration rounds. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# power-iteration rounds.
 # ---------------------------------------------------------------------------
 
 PCA_ROUNDS = 2        # THE CONTRACT: round-2 accounting state
@@ -2024,6 +2023,11 @@ EMB_PCA_POWER_ITERATION_ORACLE = (
 )
 
 
+@query(
+    "emb_pca_power_iteration",
+    oracle=EMB_PCA_POWER_ITERATION_ORACLE,
+    tier="local",
+)
 def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PRINCIPAL DIRECTION of the embedding cloud via two
     distributed POWER-ITERATION rounds on the (uncentered) second

@@ -32,9 +32,6 @@ Everything is integer arithmetic so the DuckDB twin is hash-exact:
   numerator (alpha_64 * m^2 * 2^27 * 1e6, alpha_64 = 0.709365 from
   Flajolet et al. 2007) by S * 1e6 — correctly-rounded-free, so no
   float ever enters the result.
-
-UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-driver-style evidence via LOCALCHECK).
 """
 
 from __future__ import annotations
@@ -43,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_io import load_table
+from .registry import query
 
 HLL_P = 6                      # 2^6 = 64 registers
 HLL_M = 1 << HLL_P
@@ -120,6 +118,7 @@ AGG_HLL_REGISTERS_ORACLE = f"""
     """
 
 
+@query("agg_hll_registers", oracle=AGG_HLL_REGISTERS_ORACLE, tier="local")
 def agg_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-customer registers per order year, plus an
     'all' row MERGED FROM the per-year register tables (max per
@@ -211,8 +210,7 @@ def hll_registers_frame(keys: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # agg_cms_frequencies: count-min sketch register algebra (the SUM-merge
-# twin of the HLL MAX-merge above). UNREGISTERED (r9 — local-only per
-# the COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# twin of the HLL MAX-merge above).
 # ---------------------------------------------------------------------------
 
 CMS_D = 4            # hash rows
@@ -267,6 +265,7 @@ AGG_CMS_FREQUENCIES_ORACLE = f"""
     """
 
 
+@query("agg_cms_frequencies", oracle=AGG_CMS_FREQUENCIES_ORACLE, tier="local")
 def agg_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch over part purchase frequencies, with the merge
     law attested cross-engine: the Spark side builds PER-MONTH counter
@@ -390,8 +389,7 @@ def hll_register_state(keys: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # agg_kmv_distinct: the k-minimum-values distinct sketch — third member
 # of the mergeable-sketch family (CMS counters, HLL registers, KMV
-# order statistics). UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# order statistics).
 # ---------------------------------------------------------------------------
 
 KMV_K = 16
@@ -427,6 +425,7 @@ AGG_KMV_DISTINCT_ORACLE = f"""
     """
 
 
+@query("agg_kmv_distinct", oracle=AGG_KMV_DISTINCT_ORACLE, tier="local")
 def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-minimum-values distinct sketch (Bar-Yossef et al. 2002): per
     event type keep the KMV_K (16) smallest DISTINCT avalanche-hash values of

@@ -22,7 +22,9 @@ from ..streaming.event_stream import (
     stream_events,
     user_running_totals_stream,
 )
+from .dedup_queries import DEDUP_BLOOM_INCREMENTAL_ORACLE
 from .registry import query
+from .text_queries import TEXT_QUALITY_GATE_ORACLE
 
 
 @query(
@@ -255,12 +257,10 @@ def stream_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stream_quality_gate: the C4/Gopher quality gate on the ingest stream.
-# UNREGISTERED (r8, local-only past the registry ceiling — COVERAGE.md
-# standing policy; oracle parity in
-# tests/test_oracle_parity.py::test_queued_queries_match).
 # ---------------------------------------------------------------------------
 
 
+@query("stream_quality_gate", oracle=TEXT_QUALITY_GATE_ORACLE, tier="local")
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form of text_quality_gate (same rules, same oracle —
     the batch query's _gate_frame applied to the document stream):
@@ -291,12 +291,15 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stream_bloom_gate: the Bloom membership pre-pass on the ingest
-# stream. UNREGISTERED (r9, local-only past the registry ceiling —
-# COVERAGE.md standing policy; oracle parity in
-# tests/test_oracle_parity.py::test_queued_queries_match).
+# stream.
 # ---------------------------------------------------------------------------
 
 
+@query(
+    "stream_bloom_gate",
+    oracle=DEDUP_BLOOM_INCREMENTAL_ORACLE,
+    tier="local",
+)
 def stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form of dedup_bloom_incremental (same oracle): each
     arriving micro-batch probes the STATIC history Bloom word table

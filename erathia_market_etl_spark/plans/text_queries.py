@@ -18,6 +18,7 @@ from ..operators import text as TX
 from ..operators.similarity import round6
 from ..sources.parquet_io import adaptive_partitions, load_table
 from .registry import query
+from .session_cache import session_frame
 
 _MARKER_SQL = {
     lang: "(" + ", ".join(f"'{w}'" for w in words) + ")"
@@ -112,50 +113,6 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_cols = {lang: F.col(f"score_{lang}") for lang in TX.LANG_ORDER}
     return df.withColumn(
         "predicted_lang", TX.predicted_language(score_cols)
-    ).orderBy("doc_id")
-
-
-# Driver slot RETIRED r14 (one-in-one-out: paid for the
-# mart_pareto_concentration promotion — VERDICT r13 item 8). Strict
-# subset of staying siblings: the same map-only per-document signal
-# projection over `documents` (narrow scan -> array HOFs -> ORDER BY
-# doc_id) as text_quality_signals, and its composite score is one term
-# of text_quality_gate's registered C4/Gopher composite. Values stay
-# attested by the retired-set sweep (tests/test_oracle_parity.py +
-# tools/localcheck.py at sf0.01/sf0.1 every round).
-TEXT_QUALITY_SCORE_ORACLE = """
-    WITH t AS (
-        SELECT doc_id,
-               string_split(text, ' ') AS toks,
-               LENGTH(text) AS n_chars
-        FROM documents
-    )
-    SELECT doc_id,
-           len(toks) AS n_tokens,
-           FLOOR(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) * 1000000 + 0.5)
-               / 1000000 AS unique_ratio,
-           FLOOR((
-               0.5 * LEAST(1.0, CAST(len(toks) AS DOUBLE) / 100)
-             + 0.5 * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks))
-           ) * 1000000 + 0.5) / 1000000 AS quality_score
-    FROM t
-    ORDER BY doc_id
-    """
-
-
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length saturation + lexical diversity composite
-    (the shape of a pre-training quality filter; weights are config)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.col("text"))
-    n = F.size(toks).cast("double")
-    uniq = F.size(F.array_distinct(toks)).cast("double") / n
-    length_sat = F.least(F.lit(1.0), n / 100)
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        round6(uniq).alias("unique_ratio"),
-        round6(0.5 * length_sat + 0.5 * uniq).alias("quality_score"),
     ).orderBy("doc_id")
 
 
@@ -1016,8 +973,6 @@ def decon_test_train_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # pipeline_training_funnel: end-to-end composition of the training-data
 # surface — quality gate -> near-dup dedup -> context-window accounting.
-# Registered r8 (paid for by the setop_except retirement — COVERAGE.md
-# rotation-budget section; locally oracled since r7).
 # ---------------------------------------------------------------------------
 
 FUNNEL_CONTEXT_LEN = 512  # tokens per training context window
@@ -1074,34 +1029,17 @@ PIPELINE_TRAINING_FUNNEL_ORACLE = f"""
     """
 
 
-# Session-scoped cache of the funnel's persisted 4-column gate frame
-# (r17, VERDICT r16 item 6): the r16 funnel persisted a fresh gate
-# frame per invocation and never unpersisted it — a cache-entry leak in
-# any long-lived session (the CacheManager would silently serve the
-# first invocation's frame to later plan-identical invocations, so the
-# leak was also an undisclosed cross-invocation reuse). Keyed and
-# evicted exactly like dedup_queries._SHARED_BANDS (the pattern the
-# r16 ADVICE prescribes): at most _GATE_CACHE_MAX persisted gate
-# frames per session, oldest unpersisted on eviction, all dropped with
-# the JVM. Values are deterministic, so reuse is value-invisible.
-_SHARED_GATES: dict[tuple[str, str], DataFrame] = {}
-_GATE_CACHE_MAX = 4
-
-
 def _shared_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The funnel's persisted 4-column gate frame, kept in the session
+    cache so repeated funnel runs over one directory gate it once."""
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    g = _SHARED_GATES.get(key)
-    if g is None:
-        while len(_SHARED_GATES) >= _GATE_CACHE_MAX:
-            _SHARED_GATES.pop(next(iter(_SHARED_GATES))).unpersist()
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        g = _gate_frame(docs).select(
+        return _gate_frame(docs).select(
             "doc_id", "source", "n_tokens", "keep"
         ).persist()
-        _SHARED_GATES[key] = g
-    return g
+
+    return session_frame(spark, sf_dir, "quality_gate", build)
 
 
 @query("pipeline_training_funnel", oracle=PIPELINE_TRAINING_FUNNEL_ORACLE)
@@ -1143,9 +1081,8 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs once per funnel, not once per consumer (r16, guide §2.4 —
     # profile showed the gate re-executing in every branch). Node-sized:
     # (doc_id, source, n_tokens, keep) — text never enters the cache.
-    # r17 (VERDICT r16 item 6 / ADVICE): the persist is now registered
-    # in the session-scoped keyed cache below — the r16 version leaked
-    # one cached frame per invocation for the session's lifetime.
+    # The persist lives in the session cache, so it is dropped when
+    # its directory is evicted instead of leaking per invocation.
     g = _shared_gate_frame(spark, sf_dir)
     ge = g.filter(F.col("keep")).select("doc_id", "source", "n_tokens")
     pairs = shared_minhash_pairs(spark, sf_dir)
@@ -1191,11 +1128,6 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_lm_familiarity: self-trained capped-bigram LM quality scoring.
-# UNREGISTERED (r8-implemented; next in the rotation queue behind the r9
-# registrations pack_context_windows / emb_label_centroids — registering
-# it is one-in-one-out per the COVERAGE.md standing policy). Oracle
-# parity runs locally in
-# tests/test_oracle_parity.py::test_queued_queries_match.
 # ---------------------------------------------------------------------------
 
 # Model capacity: top LM_TOP_K bigrams by corpus count (deterministic
@@ -1257,6 +1189,7 @@ TEXT_LM_FAMILIARITY_ORACLE = f"""
     """
 
 
+@query("text_lm_familiarity", oracle=TEXT_LM_FAMILIARITY_ORACLE, tier="local")
 def text_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scoring, self-trained on the corpus: fit a
     capped bigram model (top LM_TOP_K (512) bigrams by count, each carrying an
@@ -1340,7 +1273,7 @@ def text_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-substring dedup signal of Lee et al., "Deduplicating Training
 # Data Makes Language Models Better" — arXiv:2107.06499 — bounded to
 # fixed-length token spans so it runs as three hash aggregates instead
-# of a suffix array). UNREGISTERED (r8 queue, behind text_lm_familiarity).
+# of a suffix array).
 # ---------------------------------------------------------------------------
 
 SPAN_K = 8  # tokens per span; spans overlap (stride 1)
@@ -1387,6 +1320,11 @@ TEXT_DUPLICATE_SPANS_ORACLE = f"""
     """
 
 
+@query(
+    "text_duplicate_spans",
+    oracle=TEXT_DUPLICATE_SPANS_ORACLE,
+    tier="local",
+)
 def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicate-span accounting: every overlapping
     SPAN_K (8)-token span, counted across the corpus; a span is DUPLICATED
@@ -1464,10 +1402,7 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_dedup_span_removal: the REWRITE half of exact-substring dedup
 # (Lee et al. 2021, arXiv:2107.06499 §4 removes the duplicated spans
 # from the training text — text_duplicate_spans above only SCORES
-# them). REGISTERED r15 (VERDICT r14 item 6: promoted one-in-one-out,
-# slot paid by the count_probe retirement in plans/relational.py —
-# this is the named rewrite-half of the Lee-et-al. dedup story, the
-# strongest promotion candidate since mart_pareto_concentration).
+# them).
 # ---------------------------------------------------------------------------
 
 TEXT_DEDUP_SPAN_REMOVAL_ORACLE = f"""
@@ -1687,6 +1622,7 @@ TEXT_CDC_CHUNKS_ORACLE = f"""
     """
 
 
+@query("text_cdc_chunks", oracle=TEXT_CDC_CHUNKS_ORACLE, tier="local")
 def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking + cross-document chunk-dedup
     accounting: each document is cut into variable-size chunks wherever
@@ -1750,8 +1686,6 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r15 item 4 — the last big absent LLM-pipeline stage: real pretraining
 # corpora start as crawled HTML, and tags→text + nav/footer/script
 # stripping is the stage upstream of every gate this file already has).
-# UNREGISTERED (local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK + tests/test_oracle_parity.py).
 # Follows the JPEG-codec evidence pattern (plans/multimodal_queries.py
 # media_jpeg_real_decode): stage 1 SYNTHESIZES a deterministic HTML
 # document from each documents row with pure column arithmetic, stage 2
@@ -1826,6 +1760,7 @@ TEXT_HTML_EXTRACT_ORACLE = """
     """
 
 
+@query("text_html_extract", oracle=TEXT_HTML_EXTRACT_ORACLE, tier="local")
 def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markup→text boilerplate extraction under driver-style check:
     each documents row synthesizes a deterministic HTML page — a <nav>
@@ -1905,9 +1840,9 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # href harvesting, internal/external classification, host extraction:
 # the crawl-graph stage (outbound host adjacency feeding host-level
 # PageRank / spam screens) that sits beside boilerplate extraction in
-# every web-corpus pipeline. UNREGISTERED (local-only per the standing
-# policy). Same evidence pattern as text_html_extract: deterministic
-# synthesis, REAL extraction, arithmetic oracle.
+# every web-corpus pipeline. Same evidence pattern as
+# text_html_extract: deterministic synthesis, REAL extraction,
+# arithmetic oracle.
 # ---------------------------------------------------------------------------
 
 TEXT_HTML_LINKS_ORACLE = """
@@ -1932,6 +1867,7 @@ TEXT_HTML_LINKS_ORACLE = """
     """
 
 
+@query("text_html_links", oracle=TEXT_HTML_LINKS_ORACLE, tier="local")
 def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link census under driver-style check: each documents row
     synthesizes a page whose nav carries 4 EXTERNAL anchors with hosts
@@ -2016,8 +1952,6 @@ def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # text_bpe_merges: distributed BPE merge learning (Sennrich et al. 2016,
 # arXiv:1508.07909 — the tokenizer-training loop, run on-cluster).
-# UNREGISTERED (r8 queue — local-only per the COVERAGE.md standing
-# policy).
 # ---------------------------------------------------------------------------
 
 BPE_ROUNDS = 5
@@ -2080,6 +2014,7 @@ TEXT_BPE_MERGES_ORACLE = (
 )
 
 
+@query("text_bpe_merges", oracle=TEXT_BPE_MERGES_ORACLE, tier="local")
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge learning on-cluster: whitespace-tokenize the corpus
     once, reduce to the (word, count) vocabulary, segment each word
@@ -2183,8 +2118,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
 
 # ---------------------------------------------------------------------------
 # text_chunk_overlap: retrieval-prep chunking (fixed window, fixed
-# overlap). UNREGISTERED (r8 queue — local-only per the COVERAGE.md
-# standing policy).
+# overlap).
 # ---------------------------------------------------------------------------
 
 CHUNK_TOKENS = 64   # tokens per chunk
@@ -2219,6 +2153,7 @@ TEXT_CHUNK_OVERLAP_ORACLE = f"""
     """
 
 
+@query("text_chunk_overlap", oracle=TEXT_CHUNK_OVERLAP_ORACLE, tier="local")
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping-window chunker (the RAG / long-context preprocessing
     shape): each document yields chunks of CHUNK_TOKENS (64) tokens
@@ -2272,8 +2207,7 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_bpe_compression: the APPLY side of BPE — segment the corpus with
-# the learned merges and account per-source compression. UNREGISTERED
-# (r8 queue, with text_bpe_merges).
+# the learned merges and account per-source compression.
 # ---------------------------------------------------------------------------
 
 TEXT_BPE_COMPRESSION_ORACLE = (
@@ -2312,6 +2246,11 @@ TEXT_BPE_COMPRESSION_ORACLE = (
 )
 
 
+@query(
+    "text_bpe_compression",
+    oracle=TEXT_BPE_COMPRESSION_ORACLE,
+    tier="local",
+)
 def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY half of the tokenizer loop: segment every word with
     the merges text_bpe_merges learned (the shared ``_bpe_learn`` runs
@@ -2366,8 +2305,7 @@ def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_phrase_search: positional phrase retrieval with a self-derived
-# query workload. UNREGISTERED (r9 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# query workload.
 # ---------------------------------------------------------------------------
 
 PHRASE_TOP_Q = 4   # query workload: the corpus's 4 hottest bigrams
@@ -2413,6 +2351,7 @@ TEXT_PHRASE_SEARCH_ORACLE = f"""
     """
 
 
+@query("text_phrase_search", oracle=TEXT_PHRASE_SEARCH_ORACLE, tier="local")
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional phrase search (the exact-phrase complement of BM25's
     bag-of-words ranking): adjacency is captured by materializing word
@@ -2487,9 +2426,7 @@ def phrase_search_frame(docs: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# text_top_terms_tfidf: per-document keyword extraction. UNREGISTERED
-# (r9 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# text_top_terms_tfidf: per-document keyword extraction.
 # ---------------------------------------------------------------------------
 
 TFIDF_TOP_K = 5
@@ -2527,6 +2464,11 @@ TEXT_TOP_TERMS_TFIDF_ORACLE = f"""
     """
 
 
+@query(
+    "text_top_terms_tfidf",
+    oracle=TEXT_TOP_TERMS_TFIDF_ORACLE,
+    tier="local",
+)
 def text_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keyword extraction: the TFIDF_TOP_K (5) most
     distinctive terms per document by tf-idf, with the BM25-style
@@ -2579,8 +2521,6 @@ def text_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_vocab_coverage: tokenizer-vocabulary coverage / OOV-rate audit.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 VOCAB_SIZE = 16  # reference vocabulary: top-N terms by document frequency
@@ -2618,6 +2558,7 @@ TEXT_VOCAB_COVERAGE_ORACLE = f"""
     """
 
 
+@query("text_vocab_coverage", oracle=TEXT_VOCAB_COVERAGE_ORACLE, tier="local")
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit — the tokenizer-fit check a
     training pipeline runs before committing a vocab: against a
@@ -2687,8 +2628,6 @@ def vocab_coverage_frame(
 
 # ---------------------------------------------------------------------------
 # text_simpson_diversity: exact lexical-diversity signals per document.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TEXT_SIMPSON_DIVERSITY_ORACLE = """
@@ -2713,6 +2652,11 @@ TEXT_SIMPSON_DIVERSITY_ORACLE = """
     """
 
 
+@query(
+    "text_simpson_diversity",
+    oracle=TEXT_SIMPSON_DIVERSITY_ORACLE,
+    tier="local",
+)
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact lexical-diversity signals per document: type-token ratio
     and the Simpson repeat probability Σ tf·(tf−1) / (n·(n−1)) — the
@@ -2770,8 +2714,7 @@ def simpson_diversity_frame(docs: DataFrame) -> DataFrame:
 # decon_ngram_contamination: per-TRAIN-doc n-gram overlap rate vs the
 # held-out split — the GPT-3/PaLM-style decontamination direction
 # (filter TRAIN docs), complementing decon_test_train_overlap's
-# per-test winnowing report. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# per-test winnowing report.
 # ---------------------------------------------------------------------------
 
 # production pipelines use 8-13-gram exact overlap (GPT-3 appendix C
@@ -2806,6 +2749,11 @@ DECON_NGRAM_CONTAMINATION_ORACLE = f"""
     """
 
 
+@query(
+    "decon_ngram_contamination",
+    oracle=DECON_NGRAM_CONTAMINATION_ORACLE,
+    tier="local",
+)
 def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-TRAIN-document n-gram contamination rate against the
     held-out split (test = doc_id < 250, the corpus convention shared
@@ -2872,9 +2820,7 @@ def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_source_divergence: pairwise unigram-distribution L1 distance
-# between sources — corpus mixture analysis. UNREGISTERED (r11 —
-# local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# between sources — corpus mixture analysis.
 # ---------------------------------------------------------------------------
 
 TEXT_SOURCE_DIVERGENCE_ORACLE = """
@@ -2914,6 +2860,11 @@ TEXT_SOURCE_DIVERGENCE_ORACLE = """
     """
 
 
+@query(
+    "text_source_divergence",
+    oracle=TEXT_SOURCE_DIVERGENCE_ORACLE,
+    tier="local",
+)
 def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise corpus-mixture divergence: the exact L1 distance (in
     ppm of probability mass) between every two sources' unigram
@@ -3001,8 +2952,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_url_canonicalize: URL parsing + canonicalization over
 # deterministically-synthesized messy URLs (the PII-injection
 # precedent: the fixture corpus has no URLs, so the evidence rides
-# planted ones). UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# planted ones).
 # ---------------------------------------------------------------------------
 
 TEXT_URL_CANONICALIZE_ORACLE = """
@@ -3033,6 +2983,11 @@ TEXT_URL_CANONICALIZE_ORACLE = """
     """
 
 
+@query(
+    "text_url_canonicalize",
+    oracle=TEXT_URL_CANONICALIZE_ORACLE,
+    tier="local",
+)
 def text_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + domain rollup — the normalization pass
     every crawl pipeline runs before domain-level filtering and URL
@@ -3099,8 +3054,6 @@ def text_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_vocab_hapax_profile: per-source vocabulary richness profile.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TEXT_VOCAB_HAPAX_PROFILE_ORACLE = """
@@ -3127,6 +3080,11 @@ TEXT_VOCAB_HAPAX_PROFILE_ORACLE = """
     """
 
 
+@query(
+    "text_vocab_hapax_profile",
+    oracle=TEXT_VOCAB_HAPAX_PROFILE_ORACLE,
+    tier="local",
+)
 def text_vocab_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source VOCABULARY RICHNESS profile: token total, distinct
     type count, hapax-legomena count (types occurring exactly once in
@@ -3188,8 +3146,7 @@ def text_vocab_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # mart_corpus_mix: the per-source data-mix report (docs/tokens kept by
 # the quality gate, and each source's share of the post-gate token
-# budget). UNREGISTERED (r12 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# budget).
 # ---------------------------------------------------------------------------
 
 MART_CORPUS_MIX_ORACLE = f"""
@@ -3213,6 +3170,7 @@ MART_CORPUS_MIX_ORACLE = f"""
     """
 
 
+@query("mart_corpus_mix", oracle=MART_CORPUS_MIX_ORACLE, tier="local")
 def mart_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DATA-MIX report a pretraining pipeline signs off before a
     run: per corpus source, document and token counts before/after the

@@ -1,6 +1,6 @@
 """Ordered-funnel and cohort-retention semantics on planted event
-sequences. Cross-engine parity runs in test_oracle_parity's queued
-sweep; these pin the SEMANTICS — strict ordering, the conversion
+sequences. Cross-engine parity runs in test_oracle_parity's oracle
+compare; these pin the SEMANTICS — strict ordering, the conversion
 window's boundary behavior, and users who must NOT convert."""
 
 from __future__ import annotations

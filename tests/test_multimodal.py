@@ -13,7 +13,6 @@ from erathia_market_etl_spark.operators.multimodal import (
     decode_real,
     extract_features,
     media_table,
-    resize_stub,
     sample_frames,
 )
 from erathia_market_etl_spark.sources.parquet_io import load_table
@@ -70,13 +69,6 @@ def test_sample_frames_expansion(spark, media):
     assert set(per_doc) == set(vids)
     for mid, nf in vids.items():
         assert per_doc[mid] == (nf + 9) // 10  # ceil(n_frames / 10)
-
-
-def test_resize_stub_rewrites_metadata(media):
-    out = resize_stub(media, 224, 224)
-    r = out.first()
-    assert r["width"] == 224 and r["height"] == 224
-    assert out.count() == media.filter("kind='image'").count()
 
 
 def test_decode_real_compressed_is_gated():

@@ -1,6 +1,6 @@
 """Pins for the integer fixed-point PageRank kernel.
 
-Oracle parity (tests/test_oracle_parity.py::test_queued_queries_match)
+Oracle parity (tests/test_oracle_parity.py)
 proves Spark and DuckDB agree on the fixture graph; these tests prove
 the kernel computes the arithmetic it claims: exact equality against a
 pure-Python integer power iteration on generative random graphs (the

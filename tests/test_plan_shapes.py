@@ -12,7 +12,7 @@ import re
 
 import pytest
 
-from erathia_market_etl_spark.plans import all_queries
+from erathia_market_etl_spark.plans import all_queries, local_queries
 
 from .conftest import SF_T2
 
@@ -78,11 +78,9 @@ def test_q1_prunes_columns_and_broadcasts_dims(spark):
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark):
-    # retired from the driver rotation r8 (slot economics) — the O4
-    # physical-shape pin lives on here, against the function directly
-    from erathia_market_etl_spark.plans.relational import topk_parts_by_revenue
-
-    df = topk_parts_by_revenue(spark, SF_T2)
+    # O4: ORDER BY + LIMIT over an aggregate plans as per-partition
+    # heaps plus a driver merge of k rows, never a global sort
+    df = QUERIES["q3_top_customers"](spark, SF_T2)
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
 
@@ -297,19 +295,12 @@ def test_rank_limits_push_map_side_group_limit(spark, name):
     per map task instead of N rows in one sort). Losing the pushdown
     (e.g. by switching row_number to a non-rank function or adding a
     second window column) would still pass the value oracles."""
-    # topk_per_group's driver slot was retired r13, but this pin reads
-    # the FUNCTION, not the registration — the kernel shape must hold
-    # for the retired-set compare too. Explicit name->callable map
-    # (r13 ADVICE): a bare `QUERIES.get(name, topk_per_group)` would
-    # silently re-test topk_per_group for ANY name that later leaves
-    # the registry, turning this pin vacuous.
-    from erathia_market_etl_spark.plans.relational import topk_per_group
-
-    retired_fns = {"topk_per_group": topk_per_group}
+    # Explicit lookup in both tiers: a name that leaves the registry
+    # fails with KeyError instead of silently testing something else.
     if name in QUERIES:
         fn = QUERIES[name]
     else:
-        fn = retired_fns[name]  # KeyError = unknown name, loud failure
+        fn, _ = local_queries()[name]
     plan = plan_of(fn(spark, SF_T2))
     assert re.search(r"WindowGroupLimit .*, Partial", plan), name
     assert re.search(r"WindowGroupLimit .*, Final", plan), name
@@ -789,39 +780,55 @@ def test_shared_minhash_band_stage_is_cached_and_live_capped(spark):
 
 
 def test_shared_band_cache_evicts_beyond_cap(spark, tmp_path):
-    """The shared-stage cache's "handful of entries" claim is enforced:
-    past _SHARED_CACHE_MAX distinct (session, sf_dir) keys the oldest
-    band table is unpersisted and its component entry dropped — a
-    long-lived session sweeping many directories must not accumulate
-    persisted corpora."""
-    from erathia_market_etl_spark.plans import dedup_queries as dq
+    """The session cache's "handful of entries" claim is enforced: past
+    MAX_DIRS distinct (session, sf_dir) keys, every frame of the oldest
+    directory is unpersisted and dropped — a long-lived session
+    sweeping many directories must not accumulate persisted corpora.
+    Checked for the MinHash band table and the funnel's gate frame."""
+    import os
 
-    dirs = []
-    for i in range(dq._SHARED_CACHE_MAX + 1):
-        d = str(tmp_path / f"sf{i}")
-        spark.createDataFrame(
-            [(1, "srcA", f"alpha beta gamma {i}")],
-            "doc_id long, source string, text string",
-        ).write.parquet(f"{d}/documents.parquet")
-        dirs.append(d)
+    from erathia_market_etl_spark.plans import session_cache as sc
+    from erathia_market_etl_spark.plans.dedup_queries import (
+        shared_minhash_bands,
+    )
+    from erathia_market_etl_spark.plans.text_queries import (
+        _shared_gate_frame,
+    )
 
-    before = dict(dq._SHARED_BANDS)
+    def drop_all() -> None:
+        for frames in sc._FRAMES.values():
+            for df in frames.values():
+                df.unpersist()
+        sc._FRAMES.clear()
+
+    # start empty; the real-fixture entries come back untouched at the
+    # end so sibling tests keep their warm cache regardless of order
+    before = dict(sc._FRAMES)
+    sc._FRAMES.clear()
     try:
-        first = dq.shared_minhash_bands(spark, dirs[0])
-        for d in dirs[1:]:
-            dq.shared_minhash_bands(spark, d)
-        assert len(dq._SHARED_BANDS) <= dq._SHARED_CACHE_MAX
-        # the first (oldest) entry was evicted and unpersisted
-        import os
+        for case, build in (
+            ("bands", shared_minhash_bands),
+            ("gate", _shared_gate_frame),
+        ):
+            dirs = []
+            for i in range(sc.MAX_DIRS + 1):
+                d = str(tmp_path / case / f"sf{i}")
+                spark.createDataFrame(
+                    [(1, "srcA", f"alpha beta gamma {i}")],
+                    "doc_id long, source string, text string",
+                ).write.parquet(f"{d}/documents.parquet")
+                dirs.append(d)
 
-        key0 = (spark.sparkContext.applicationId, os.path.abspath(dirs[0]))
-        assert key0 not in dq._SHARED_BANDS
-        assert not first.storageLevel.useMemory
+            first = build(spark, dirs[0])
+            assert first.storageLevel.useMemory, case
+            for d in dirs[1:]:
+                build(spark, d)
+            assert len(sc._FRAMES) <= sc.MAX_DIRS, case
+            # the first (oldest) entry was evicted and unpersisted
+            key0 = (spark.sparkContext.applicationId, os.path.abspath(dirs[0]))
+            assert key0 not in sc._FRAMES, case
+            assert not first.storageLevel.useMemory, case
+            drop_all()
     finally:
-        # restore the real-fixture entries so sibling tests keep their
-        # warm cache regardless of execution order
-        for k, v in list(dq._SHARED_BANDS.items()):
-            if k not in before:
-                dq._SHARED_BANDS.pop(k).unpersist()
-                dq._SHARED_COMPONENTS.pop(k, None)
-        dq._SHARED_BANDS.update(before)
+        drop_all()
+        sc._FRAMES.update(before)

@@ -196,12 +196,10 @@ def test_rotation_steady_state_displacement():
 
 
 def test_r14_registrations_landed_with_zero_displacement():
-    """The r13-staged r14 state, landed: mart_revenue_gini (slot
-    pre-paid by the r13 agg_cube retirement) and
-    mart_pareto_concentration (paid by the r14 text_quality_score
-    retirement) are REGISTERED and both sit inside the driver's 50-slot
-    cap together with every aged green — 48 aged r12 greens + 2
-    never-green = exactly 50, zero displacement. Runs against the LIVE
+    """The r14 state, landed: mart_revenue_gini and
+    mart_pareto_concentration are REGISTERED and both sit inside the
+    driver's 50-slot cap together with every aged green — 48 aged r12
+    greens + 2 never-green = exactly 50, zero displacement. Runs against the LIVE
     registry + committed CORRECTNESS state so any later registration or
     _CHANGED entry that would push an aged green past the freshness
     window fails here first."""
@@ -233,9 +231,7 @@ def test_r14_registrations_landed_with_zero_displacement():
 
 def test_r15_promotion_landed_with_zero_displacement():
     """The r15 one-in-one-out: text_dedup_span_removal (the Lee-et-al.
-    rewrite half, VERDICT r14 item 6) is REGISTERED, paid by the
-    count_probe retirement (strict subset of agg_distinct_aggregates /
-    agg_grouping_sets over the same table). Must-run = 49 aged r13
+    rewrite half) is REGISTERED in the driver tier. Must-run = 49 aged r13
     greens + 1 never-green = exactly 50, zero displacement. Runs
     against the LIVE registry + committed CORRECTNESS state."""
     from erathia_market_etl_spark.plans.registry import (
@@ -267,21 +263,46 @@ def test_r15_promotion_landed_with_zero_displacement():
 
 def test_coverage_markers_match_registry_sets():
     """COVERAGE.md's ★ (driver-attested) markers must track the live
-    sets: a retired or local-only query carrying ★ overstates its
-    evidence class (r13 found three stale ★ from the r8/r12
-    retirements). Generated artifacts already derive from JSON; this
-    pins the one hand-written narrative the judge reads."""
+    tiers: a local-tier query carrying ★ overstates its evidence class.
+    Generated artifacts already derive from JSON; this pins the one
+    hand-written narrative the judge reads."""
     from pathlib import Path
 
-    from tests.test_oracle_parity import _RETIRED, _queued
+    from erathia_market_etl_spark.plans import local_queries
 
     text = Path(__file__).resolve().parents[1].joinpath(
         "COVERAGE.md"
     ).read_text()
-    stale = [
-        n for n in list(_RETIRED) + list(_queued())
-        if f"★ `{n}`" in text
-    ]
+    stale = [n for n in local_queries() if f"★ `{n}`" in text]
     assert stale == [], (
-        f"COVERAGE.md marks non-registered queries as ★: {stale}"
+        f"COVERAGE.md marks local-tier queries as ★: {stale}"
     )
+
+
+def test_registry_tiers():
+    """One registry, two tiers: the driver tier is exactly what
+    __spark_entry__ exposes, the local tier is disjoint from it, every
+    query in both carries an oracle, and a name registers once."""
+    import __spark_entry__ as entry
+    from erathia_market_etl_spark.plans import local_queries, registry
+
+    driver = set(QUERIES)
+    local = local_queries()
+    assert len(driver) == 100
+    assert driver.isdisjoint(local)
+    assert set(registry.ORACLES) == driver
+    assert all(registry.ORACLES[n].strip() for n in driver)
+    assert all(oracle.strip() for _, oracle in local.values())
+    assert set(entry.queries()) == driver
+    assert entry.oracle_sql() == registry.all_oracles()
+    assert set(entry.oracle_sql()) == driver
+
+    name = next(iter(local))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.query(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
+    name = next(iter(driver))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.query(name, oracle="SELECT 1", tier="local")(
+            lambda spark, sf_dir: None
+        )
+    assert set(QUERIES) == driver and local_queries() == local

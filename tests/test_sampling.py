@@ -59,10 +59,12 @@ def test_freq_items_superset_guarantee(spark):
 def test_hash_split_is_machine_independent(spark):
     # the production split must not depend on partitioning: recompute
     # with a different partition count, expect identical assignment
-    from erathia_market_etl_spark.plans.sampling_queries import sample_split_assign
+    from erathia_market_etl_spark.plans.sampling_queries import (
+        sample_leakage_safe_splits,
+    )
 
-    a = sample_split_assign(spark, SF_T2).collect()
-    b = (sample_split_assign(spark, SF_T2)
+    a = sample_leakage_safe_splits(spark, SF_T2).collect()
+    b = (sample_leakage_safe_splits(spark, SF_T2)
          .repartition(13).orderBy("doc_id").collect())
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
@@ -296,7 +298,7 @@ def test_leakage_safe_splits_keep_pairs_together(spark):
     """The leakage-safety invariant, non-vacuously: (a) every LSH
     candidate pair lands in ONE split; (b) the fixture actually
     contains pairs whose DOC-ID buckets straddle a split cut — i.e.
-    the naive sample_split_assign provably separates near-dups that
+    a naive doc_id hash split provably separates near-dups that
     this query keeps together; (c) singletons keep their own doc_id as
     group (the assignment degenerates to the naive one exactly where
     no duplication exists)."""

@@ -2,7 +2,7 @@
 against a pure-Python reference, and the rho bit-length idiom.
 
 Cross-engine parity (Spark vs DuckDB) for agg_hll_registers runs in
-tests/test_oracle_parity.py::test_queued_queries_match; these tests pin
+tests/test_oracle_parity.py's local-tier compare; these tests pin
 the SEMANTICS against an independent plain-Python HLL so a shared
 cross-engine bug cannot hide (the gap-fill precedent, commit faaed24).
 """

@@ -1,6 +1,6 @@
 """Semantic pins for the r8 time-series operators on PLANTED events.
 
-Oracle parity (tests/test_oracle_parity.py::test_queued_queries_match)
+Oracle parity (the local-tier compare in tests/test_oracle_parity.py)
 proves Spark and DuckDB agree at the fixture SF; these tests prove the
 operators mean what they claim on inputs constructed to exercise the
 claims: LOCF must carry the LAST observation (not interpolate, not

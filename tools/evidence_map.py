@@ -9,10 +9,9 @@ single generated table:
 
     name | set | newest green round | evidence source | SFs checked
 
-Sets: ``registered`` (in the driver's 100-slot registry; attested by a
-CORRECTNESS row when slotted, by a displaced-sweep LOCALCHECK row when
-not), ``local-only`` (the extension wave, LOCALCHECK only), ``retired``
-(kept queries whose driver slots were re-spent, LOCALCHECK only).
+Sets, one per registry tier: ``registered`` (the driver tier; attested
+by a CORRECTNESS row when slotted, by a displaced-sweep LOCALCHECK row
+when not) and ``local-only`` (the local tier, LOCALCHECK only).
 
 Run at round close (after tools/localcheck.py): the table is committed
 so a judge can diff it against the JSON artifacts directly.
@@ -99,25 +98,21 @@ def collect_evidence(root: Path) -> dict[str, dict]:
 
 
 def query_sets() -> dict[str, str]:
-    """name -> registered | local-only | retired, from the live code."""
-    from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued, _retired
+    """name -> registered | local-only, from the registry tiers."""
+    from erathia_market_etl_spark.plans import all_queries, local_queries
 
     sets = {n: "registered" for n in all_queries()}
-    sets.update({n: "local-only" for n in _queued()})
-    sets.update({n: "retired" for n in _retired()})
+    sets.update({n: "local-only" for n in local_queries()})
     return sets
 
 
 def query_families() -> dict[str, str]:
     """name -> defining plan module (the family grouping COVERAGE.md's
     narrative sections follow), from the live callables."""
-    from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued, _retired
+    from erathia_market_etl_spark.plans import all_queries, local_queries
 
     fns: dict[str, object] = dict(all_queries())
-    fns.update({n: fq[0] for n, fq in _queued().items()})
-    fns.update({n: fq[0] for n, fq in _retired().items()})
+    fns.update({n: fq[0] for n, fq in local_queries().items()})
     return {
         n: getattr(f, "__module__", "?").rsplit(".", 1)[-1]
         for n, f in fns.items()
@@ -137,7 +132,7 @@ def write_family_summary(
     rows: dict[str, dict] = {}
     for name, fam in families.items():
         r = rows.setdefault(
-            fam, {"registered": 0, "local-only": 0, "retired": 0, "newest": 0}
+            fam, {"registered": 0, "local-only": 0, "newest": 0}
         )
         r[sets.get(name, "local-only")] += 1
         ev = evidence.get(name)
@@ -146,22 +141,22 @@ def write_family_summary(
     lines = [
         _SUMMARY_BEGIN,
         "",
-        "| family (plan module) | registered | local-only | retired | total | newest green |",
-        "|---|---|---|---|---|---|",
+        "| family (plan module) | registered | local-only | total | newest green |",
+        "|---|---|---|---|---|",
     ]
-    tot = {"registered": 0, "local-only": 0, "retired": 0}
+    tot = {"registered": 0, "local-only": 0}
     for fam in sorted(rows):
         r = rows[fam]
-        total = r["registered"] + r["local-only"] + r["retired"]
+        total = r["registered"] + r["local-only"]
         for k in tot:
             tot[k] += r[k]
         lines.append(
             f"| {fam} | {r['registered']} | {r['local-only']} | "
-            f"{r['retired']} | {total} | r{r['newest']} |"
+            f"{total} | r{r['newest']} |"
         )
     lines.append(
         f"| **all** | **{tot['registered']}** | **{tot['local-only']}** | "
-        f"**{tot['retired']}** | **{sum(tot.values())}** | |"
+        f"**{sum(tot.values())}** | |"
     )
     lines += ["", _SUMMARY_END]
     block = "\n".join(lines)
@@ -281,8 +276,7 @@ def main() -> None:
     lines += [
         "",
         f"Totals: {len(sets)} queries ({sum(1 for v in sets.values() if v == 'registered')} "
-        f"registered, {sum(1 for v in sets.values() if v == 'local-only')} local-only, "
-        f"{sum(1 for v in sets.values() if v == 'retired')} retired); "
+        f"registered, {sum(1 for v in sets.values() if v == 'local-only')} local-only); "
         f"{len(with_evidence)} with green evidence, {len(missing)} never-green"
         + (f" ({', '.join(missing)})" if missing else "")
         + f"; newest round seen: r{newest}.",

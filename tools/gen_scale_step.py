@@ -337,26 +337,17 @@ def run_compare() -> None:
     pagerank fixed-point, and the Gini int64 envelope)."""
     from erathia_market_etl_spark.config import EngineConfig
     from erathia_market_etl_spark.plans import registry
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        AGG_HLL_REGISTERS_ORACLE,
-        agg_hll_registers,
-    )
     from erathia_market_etl_spark.session import get_spark
     from erathia_market_etl_spark.testing import compare_query
 
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        _ivfpq_oracle,
-        sim_ivfpq_topk,
-    )
-
-    registry._load_all()
+    local = registry.local_queries()
     items = [
         (n, registry.QUERIES[n], registry.ORACLES[n]) for n in COMPARE_NAMES
     ]
+    # local-tier extras; sim_ivfpq_topk is the contract sibling,
+    # third-fingerprint-pinned r14
     items += [
-        ("agg_hll_registers", agg_hll_registers, AGG_HLL_REGISTERS_ORACLE),
-        # local-only contract sibling, third-fingerprint-pinned r14
-        ("sim_ivfpq_topk", sim_ivfpq_topk, _ivfpq_oracle()),
+        (n, *local[n]) for n in ("agg_hll_registers", "sim_ivfpq_topk")
     ]
     spark = get_spark(
         EngineConfig(app_name="sf1-compare", driver_memory="24g")
