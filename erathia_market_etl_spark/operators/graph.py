@@ -2,51 +2,68 @@
 
 The dedup endgame: near-dup PAIRS (MinHash/SimHash/embedding buckets)
 are edges; the clusters are connected components; the kept document per
-cluster is the component's canonical (minimum) id. The reference has no
-iterative operators at all (SURVEY.md §2 — batch SQL only); this is the
-extension surface's one genuinely iterative algorithm, expressed as a
-driver-controlled loop of DataFrame joins — the sanctioned use of
-driver control flow (convergence test), with all data movement staying
-distributed.
-
-Three kernels, same (v, component_id) contract:
+cluster is the component's canonical (minimum) id. Every kernel returns
+the same contract: (v, component_id = component minimum) for every
+vertex that appears in the edge list, deterministically.
 
   * ``connected_components`` — min-label propagation. O(component
     diameter) rounds, ONE labels-sized shuffle per round; the cheapest
-    kernel when clusters are small and dense (the common dedup shape).
+    distributed kernel when clusters are small and dense (the common
+    dedup shape).
   * ``connected_components_star`` — alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14). O(log² n) rounds REGARDLESS of diameter: each round
     rewires every vertex toward its neighborhood minimum, so
     chain-shaped clusters (paraphrase chains A≈B≈C≈…) collapse
     exponentially instead of one hop per round. More shuffles per
-    round (two group-join-dedup passes + a convergence anti-join), so
-    it wins exactly when diameter is the binding constraint — which at
-    100 TB it is, because one adversarial chain makes the whole job
-    round-bound (r5 VERDICT item 1).
-  * ``connected_components_auto`` (r6 VERDICT item 1) — min-label with
-    ESCALATION: run min-label for a bounded number of rounds; if it
-    converges (the common dense dup-cluster regime — measured 4 rounds
-    on the fixture LSH graphs at every SF), that IS the whole cost, no
-    probe, no extra shuffle. If the budget exhausts (deep/chain-shaped
-    structure), CONTRACT the graph by the partial labels (one
-    two-sided join; any partial clustering shrinks the edge set) and
-    finish with the alternating-star kernel on the contracted graph,
-    composing labels with one final join — so the total round count is
-    escalate_after + O(log² n) and the r5 diameter robustness is
-    preserved. A prepass-then-probe design was measured first and
-    rejected: canonicalize+prepass+probe cost ~2.4 s of extra shuffles
-    and driver actions at sf0.1 on graphs where min-label alone
-    finishes in 2.5 s (bench notes, r7). The registered dedup
-    pipelines use this kernel; tests/test_graph.py pins the routing on
-    planted dense and path graphs, the round-count gap, and
-    three-kernel label equality.
+    round, so it wins exactly when diameter is the binding constraint:
+    one adversarial chain makes a min-label job round-bound.
+  * ``connected_components_auto`` — the kernel the registered pipelines
+    use. It picks by size:
+
+      - LOCAL: one bounded probe, ``.limit(BOUND + 1).collect()`` over
+        the persisted edge frame. A graph of at most ``BOUND`` edges
+        with integral, non-NULL endpoints is labelled on the driver by
+        a vectorized numpy union-find, and the labels return to the
+        plan as an Arrow-built local relation under a broadcast hint.
+        The fixture dedup graphs are tens to hundreds of edges (28 in
+        the funnel at sf0.01, 645 at sf0.1), where each distributed
+        round is a few Spark jobs of fixed overhead: measured on a
+        4-core VM (8 shuffle partitions), a warm funnel construction
+        ran 13 Spark jobs in ~2.3 s with min-label and runs 6 in
+        ~0.9 s with the local path.
+        ``BOUND`` (2^16 edges) keeps the collect to a few MiB of driver
+        memory.
+      - DISTRIBUTED, for everything else: min-label with ESCALATION.
+        Run min-label for a bounded number of rounds; if it converges
+        (dense dup clusters), that is the whole cost. If the budget
+        exhausts (deep/chain-shaped structure), CONTRACT the graph by
+        the partial labels and finish with the alternating-star kernel
+        on the contracted graph, composing labels with one final join —
+        total rounds escalate_after + O(log² n). A
+        prepass-then-probe selector was measured and rejected: its extra
+        shuffles and driver actions cost more than min-label alone on
+        dense graphs.
+
+    tests/test_graph.py pins the routing (local, dense, path), the
+    round-count gap, and label equality across all kernels.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructField,
+    StructType,
+)
 
 # connected_components_auto: min-label round budget before escalating
 # to the star kernel. Dense dup-cluster graphs converge in ~3-4 rounds
@@ -55,6 +72,15 @@ from pyspark.sql import functions as F
 # cost more than a constant number of cheap labels-only rounds before
 # the O(log² n) kernel takes over.
 AUTO_ESCALATE_AFTER = 6
+
+# connected_components_auto: the largest edge list labelled on the
+# driver. The probe holds at most BOUND + 1 Rows (a few MiB) and the
+# union-find a handful of int64 arrays of that length.
+BOUND = 1 << 16
+
+# narrowest to widest: the local path's output type is the wider of the
+# two endpoint types, as the distributed kernels' symmetrize coerces it
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str,
@@ -86,7 +112,7 @@ def _symmetrize(edges: DataFrame, src: str, dst: str,
     # the cluster-constant spark.sql.shuffle.partitions — every
     # propagation round re-reads this cached layout, so a tiny graph
     # frozen at 32 cached partitions pays a full task wave per round
-    # for nothing (r16, guide §2.2 scale-adaptive partitioning)
+    # for nothing
     e = e.repartition(num_partitions, "b") if num_partitions else e.repartition("b")
     return e.dropDuplicates().persist()
 
@@ -105,9 +131,8 @@ def _minlabel_rounds(
     # changes some label (every edge's larger endpoint improves), so the
     # convergence probe starts at round 2.
     # Round 1 checkpoints EAGERLY and its job doubles as the edge
-    # cache's materialization (callers no longer run a separate count
-    # job — r16): one job computes the possibly-expensive edge
-    # pipeline, fills sym's cache, and aggregates the first labels.
+    # cache's materialization: one job computes the possibly-expensive
+    # edge pipeline, fills sym's cache, and aggregates the first labels.
     labels = (
         sym.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
@@ -121,7 +146,7 @@ def _minlabel_rounds(
         # persisted pre-partitioned on b, so the join must neither
         # re-exchange nor (as the default sort-merge plan would, labels
         # being an unknown-stat checkpointed RDD) re-SORT the edge table
-        # every round (r16, guide §3.1).
+        # every round.
         nbr_min = (
             sym.join(labels.hint("shuffle_hash"), sym["b"] == labels["v"])
             .select(F.col("a").alias("v"), "lbl")
@@ -131,7 +156,7 @@ def _minlabel_rounds(
         # min(lbl) < min(lbl where own) == "this vertex improved") —
         # one shuffle per round, instead of a separate
         # join-against-old-labels action that re-shuffled both sides
-        # just to count changes. Checkpoints are LAZY (r16): the
+        # just to count changes. Checkpoints are LAZY: the
         # convergence probe below is the round's one driver action and
         # its job doubles as the checkpoint materialization — the old
         # eager checkpoint + probe pair cost two jobs per round.
@@ -171,7 +196,7 @@ def connected_components(
         labels, rounds, _ = _minlabel_rounds(sym, max_iter)
     finally:
         # labels is checkpointed — safe to drop the edge cache, on the
-        # error path too (r6 ADVICE: no cache leak when a round throws)
+        # error path too (no cache leak when a round throws)
         sym.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
@@ -268,16 +293,12 @@ def _star_rounds(
         )
         n_new = small.count()
         # Convergence probe: count + (only when counts tie) a keys-only
-        # anti-join second action. The r6-suggested alternative — riding
-        # an own/new flag through the small-star dedup aggregation, as
-        # the min-label kernel does — was evaluated and REJECTED in r7:
-        # it would union the previous edge set into every round's dedup
+        # anti-join second action. Riding an own/new flag through the
+        # small-star dedup aggregation, as the min-label kernel does,
+        # would union the previous edge set into every round's dedup
         # shuffle (doubling that exchange's input on EVERY round) to
         # save one keys-only action that fires on the terminal round
-        # only. Since r7's kernel escalation, the star rounds also only
-        # ever run on contracted chain-shaped graphs (small edge sets,
-        # few rounds), so both costs are marginal — but the trade still
-        # favors the anti-join at scale.
+        # only.
         stable = n_new == 0 or (
             n_new == n_old
             and small.join(e, ["hi", "lo"], "left_anti").isEmpty()
@@ -370,33 +391,92 @@ def connected_components_star(
         out = _star_labels(e, canon)
     finally:
         # _star_labels checkpoints everything derived from canon, so the
-        # cache is releasable on success AND on the raise path (r6
-        # ADVICE: the non-convergence RuntimeError must not leak the
-        # persisted canonical edge table)
+        # cache is releasable on success AND on the raise path (the
+        # non-convergence RuntimeError must not leak the persisted
+        # canonical edge table)
         canon.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
     return out
 
 
+def _local_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(vertices, component minimum) of the edge list (a[i], b[i]).
+
+    Vectorized union-find over compressed ids: np.unique sorts the
+    vertex ids, so the minimum compressed id of a component is its
+    minimum vertex. Each pass hooks the larger root of every edge onto
+    the smaller one and then pointer-jumps every vertex to its root; it
+    stops when every edge joins two vertices of one root. A parent
+    never exceeds its child, so no cycle forms and each final root is
+    its component's minimum."""
+    verts, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a):]
+    parent = np.arange(len(verts))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        if np.array_equal(ra, rb):
+            return verts, verts[parent]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _local_components(pairs: DataFrame) -> DataFrame | None:
+    """The local path of ``connected_components_auto``: labels for the
+    (a, b) frame ``pairs`` computed on the driver, or None when the
+    graph must go to the distributed kernels — more than BOUND edges, a
+    non-integral endpoint type, or a NULL endpoint. ``pairs`` must be
+    persisted: the probe and a distributed fallback then share one run
+    of the upstream edge plan."""
+    import pyarrow as pa
+
+    types = [f.dataType for f in pairs.schema]
+    if not all(isinstance(t, _INTEGRAL) for t in types):
+        return None
+    head = pairs.limit(BOUND + 1).collect()
+    if len(head) > BOUND:
+        return None
+    try:
+        ab = np.array(head, dtype=np.int64).reshape(-1, 2)
+    except TypeError:  # int(None): a NULL endpoint
+        return None
+    verts, cid = _local_labels(ab[:, 0], ab[:, 1])
+    vtype = max(types, key=lambda t: _INTEGRAL.index(type(t)))
+    # the distributed kernels' schema: v keeps the endpoints'
+    # nullability, component_id is a min() aggregate (nullable)
+    schema = StructType([
+        StructField("v", vtype, any(f.nullable for f in pairs.schema)),
+        StructField("component_id", vtype, True),
+    ])
+    # Arrow-built, so Spark makes a LocalRelation with known size; a
+    # frame built from a Python list is an RDD scan of unknown size,
+    # which plans sort-merge joins with two extra exchanges downstream
+    table = pa.table({"v": verts, "component_id": cid})
+    return F.broadcast(pairs.sparkSession.createDataFrame(table, schema))
+
+
 def connected_components_auto(
     edges: DataFrame, src: str, dst: str, max_iter: int = 30,
     stats: dict | None = None, escalate_after: int = AUTO_ESCALATE_AFTER,
-    num_partitions: int | None = None,
+    num_partitions: Callable[[], int] | None = None,
 ) -> DataFrame:
-    """Connected components with kernel escalation (r6 VERDICT item 1):
-    same (v, component_id = component minimum) contract and determinism
-    as the other kernels; pays the star kernel's per-round constant
-    factor ONLY on graphs that need its diameter robustness.
+    """Connected components, kernel chosen by graph size: same
+    (v, component_id = component minimum) contract and determinism as
+    the other kernels.
 
-    Phase 1 — min-label, ``escalate_after`` rounds max: on dense
-    dup-cluster graphs (the near-clique shape LSH candidate pairs
-    produce — the common case by construction) min-label converges in
-    ~3-4 rounds of ONE labels-sized shuffle + ONE action each, and
-    phase 1 is the entire cost: identical to ``connected_components``,
-    zero selection overhead. (A canonicalize+prepass+probe design was
-    measured and rejected — it added ~2.4 s of shuffles/actions at
-    sf0.1 before the first propagation round; see module docstring.)
+    Local path — a graph of at most ``BOUND`` edges with integral,
+    non-NULL endpoints is labelled on the driver after one bounded
+    probe (``_local_components``); no Spark round runs.
+
+    Distributed path, phase 1 — min-label, ``escalate_after`` rounds
+    max: on dense dup-cluster graphs (the near-clique shape LSH
+    candidate pairs produce) min-label converges in ~3-4 rounds of ONE
+    labels-sized shuffle + ONE action each, and phase 1 is the entire
+    cost: identical to ``connected_components``.
 
     Phase 2 — escalation, only if phase 1's budget exhausts (deep or
     chain-shaped structure): CONTRACT the graph by the partial labels
@@ -406,78 +486,82 @@ def connected_components_auto(
     structure and minima exactly; partial clustering from phase 1
     shrinks the edge set (on a pure path it is a harmless relabeling).
     Run the alternating-star kernel on the contracted graph — total
-    rounds ≤ escalate_after + O(log² n), the r5 guarantee — and
-    compose with one final left join:
-    component(v) = star_label(ml_label(v)), falling back to
+    rounds ≤ escalate_after + O(log² n) — and compose with one final
+    left join: component(v) = star_label(ml_label(v)), falling back to
     ml_label(v) for labels whose contracted vertex became isolated.
 
     Non-convergence of the star phase raises (inherited from
     ``_star_rounds``) — the registered pipelines never see silent
-    partial labels. stats (optional): rounds (total across phases),
-    kernel ("minlabel" | "minlabel+star"), star_rounds."""
-    sym = _symmetrize(edges, src, dst, num_partitions)
+    partial labels. stats (optional): rounds (Spark rounds, total
+    across phases; 0 on the local path), kernel ("local" | "minlabel"
+    | "minlabel+star"), star_rounds. num_partitions (optional) returns
+    the edge exchange's width; it is called only on the distributed
+    path, so the local path skips whatever scan sizes it."""
+    pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
     try:
-        # _minlabel_rounds' eager round-1 job computes the edge
-        # pipeline once and fills the cache (see connected_components)
-        labels, rounds, converged = _minlabel_rounds(sym, escalate_after)
-        if converged:
-            kernel, star_rounds = "minlabel", 0
-            out = labels.select("v", F.col("lbl").alias("component_id"))
+        out = _local_components(pairs)
+        if out is not None:
+            kernel, rounds, star_rounds = "local", 0, 0
         else:
-            kernel = "minlabel+star"
-            la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("ca"))
-            lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("cb"))
-            contracted = (
-                sym.join(la, "a")
-                .join(lb, "b")
-                .select("ca", "cb")
-                .filter(F.col("ca") != F.col("cb"))
+            out, rounds, kernel, star_rounds = _auto_distributed(
+                pairs, max_iter, escalate_after, num_partitions
             )
-            # Boundary case (r7 ADVICE): a graph whose fixed point lands
-            # exactly on round escalate_after makes changes in its last
-            # budget round, so _minlabel_rounds cannot OBSERVE the
-            # convergence — but then every surviving edge joins
-            # same-label vertices and the contracted edge set is EMPTY
-            # (labels closed under edges ⇒ each component shares one
-            # label; that label is a member vertex and the member with
-            # lbl(m) = m is the component minimum — the full contract).
-            # One keys-only isEmpty probe here is strictly cheaper than
-            # driving the star kernel (canonicalize persist + prepass
-            # checkpoint + per-round actions) over zero edges.
-            if contracted.isEmpty():
-                kernel, star_rounds = "minlabel", 0
-                out = labels.select("v", F.col("lbl").alias("component_id"))
-            else:
-                sub: dict = {}
-                # connected_components_star materializes eagerly
-                # (prepass / per-round checkpoints), so nothing
-                # downstream references sym after this call returns
-                star = connected_components_star(
-                    contracted, "ca", "cb", max_iter, stats=sub
-                )
-                star_rounds = sub["rounds"]
-                rounds += star_rounds
-                out = (
-                    labels.join(
-                        star.select(
-                            F.col("v").alias("lbl"),
-                            F.col("component_id").alias("star_cid"),
-                        ),
-                        "lbl",
-                        "left",
-                    )
-                    .select(
-                        "v",
-                        F.coalesce("star_cid", "lbl").alias("component_id"),
-                    )
-                )
     finally:
-        sym.unpersist()
+        # the local labels are driver data and the distributed ones are
+        # checkpointed: nothing returned reads the edge cache
+        pairs.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
         stats["kernel"] = kernel
         stats["star_rounds"] = star_rounds
     return out
+
+
+def _auto_distributed(
+    pairs: DataFrame, max_iter: int, escalate_after: int,
+    num_partitions: Callable[[], int] | None,
+) -> tuple[DataFrame, int, str, int]:
+    """The distributed path of ``connected_components_auto`` over the
+    (a, b) frame ``pairs``: (labels, rounds, kernel, star_rounds)."""
+    sym = _symmetrize(pairs, "a", "b", num_partitions and num_partitions())
+    try:
+        labels, rounds, converged = _minlabel_rounds(sym, escalate_after)
+        kernel, star_rounds = "minlabel", 0
+        out = labels.select("v", F.col("lbl").alias("component_id"))
+        if converged:
+            return out, rounds, kernel, star_rounds
+        la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("ca"))
+        lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("cb"))
+        contracted = (
+            sym.join(la, "a")
+            .join(lb, "b")
+            .select("ca", "cb")
+            .filter(F.col("ca") != F.col("cb"))
+        )
+        # A fixed point reached exactly on round escalate_after is not
+        # OBSERVED as converged, but then every edge joins same-label
+        # vertices and the contraction is empty: the labels are already
+        # exact (labels closed under edges ⇒ one label per component,
+        # and the member labelling itself is the minimum). One keys-only
+        # probe is cheaper than the star kernel's persist, prepass and
+        # per-round actions over zero edges.
+        if contracted.isEmpty():
+            return out, rounds, kernel, star_rounds
+        sub: dict = {}
+        # the star kernel materializes eagerly (prepass and per-round
+        # checkpoints), so nothing returned references sym afterwards
+        star = connected_components_star(contracted, "ca", "cb", max_iter, stats=sub)
+        star_rounds = sub["rounds"]
+        out = labels.join(
+            star.select(
+                F.col("v").alias("lbl"), F.col("component_id").alias("star_cid")
+            ),
+            "lbl",
+            "left",
+        ).select("v", F.coalesce("star_cid", "lbl").alias("component_id"))
+        return out, rounds + star_rounds, "minlabel+star", star_rounds
+    finally:
+        sym.unpersist()
 
 
 PAGERANK_SCALE = 1_000_000  # fixed-point unit: rank 1.0 == 1e6
@@ -499,7 +583,7 @@ def pagerank_fixed_point(
     outgoing edge (callers wanting undirected influence symmetrize
     first — then that is every node).
 
-    Stopping contract (r9, VERDICT r8 item 6 — two modes, explicit):
+    Stopping contract (two modes, explicit):
 
     * ``tol=None`` (default): EXACTLY ``iters`` power-iteration
       rounds. This is an ACCOUNTING shape, not converged centrality —
@@ -529,7 +613,7 @@ def pagerank_fixed_point(
     1e6 per step — irrelevant for the ordering/weighting PageRank is
     used for, and a price worth paying for a hash-exact contract.)
 
-    Overflow envelope (corrected r9 per ADVICE): total mass is
+    Overflow envelope: total mass is
     conserved at ~n * SCALE, so the binding step is not the per-node
     long SUM (which wraps past ~9.2e12 nodes) but the ``85 * sum``
     damping multiply applied to it — in the degenerate
@@ -565,11 +649,8 @@ def pagerank_fixed_point(
     # aggregate (clustering satisfied — no second exchange) and
     # co-partitions the edge table with every round's contrib/rank
     # frames (all keyed on the same 32/shuffle-partition hash of the
-    # vertex id), so no round re-exchanges or re-sorts the edges. The
-    # r16 profile of the old shape showed the edge pipeline executing
-    # TWICE (deg subtree + ewd subtree, separate exchanges) and every
-    # per-round join planned as SortMergeJoin against unknown-stat
-    # checkpointed rank RDDs — sorting the edge table each round.
+    # vertex id), so no round re-exchanges or re-sorts the edges, and
+    # the edge pipeline executes once, not once per consumer subtree.
     sym = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # num_partitions: sized from the caller's source scan
     # (adaptive_partitions) — see _symmetrize's rationale
@@ -605,14 +686,14 @@ def pagerank_fixed_point(
         # contrib is a PROJECTION (deg rides inside the rank frame), so
         # a round is: one shuffled-hash join of the persisted edges
         # against the node-sized contrib table (build side = contrib —
-        # no sort of the edge table, guide §3.1), one dst-keyed
+        # no sort of the edge table), one dst-keyed
         # partial+final aggregate (the round's only full exchange), and
         # one node-sized left join back onto deg for teleport-mass
         # retention. LEFT join from the node set, not the bare
         # aggregate: a node with out-edges but no in-contributions this
         # round (directed graphs) must KEEP its teleport-mass rank row —
         # dropping it would silently remove it from the output and stop
-        # its mass feeding later rounds (r8 self-review).
+        # its mass feeding later rounds.
         contrib = ranks.select(
             F.col("v").alias("src"), F.expr("rank DIV deg").alias("contrib")
         )

@@ -149,18 +149,18 @@ def sign_band_array(a: Column | str, n_bands: int = N_SIGN_BANDS,
     DuckDB twin per band: concat of CASE WHEN a[d] > 0 THEN '1' ELSE '0' END
     over that band's dims (see _SIGN_BANDS_CTE in plans/similarity_queries).
 
-    r17: built as ONE F.expr parse instead of 32 nested when/concat
-    Column calls — the py4j round trips to assemble the tree cost
-    ~100 ms of DRIVER time per query construction (measured; the
-    construction-timed banded queries paid it in every bench run).
-    The parsed tree is the identical CASE/concat expression.
-    ``a`` may be a column NAME (preferred — enables the single-parse
-    path) or a Column (falls back to per-call assembly for computed
-    inputs)."""
+    Built as ONE F.expr parse instead of 32 nested when/concat Column
+    calls — the py4j round trips to assemble the tree cost ~100 ms of
+    DRIVER time per query construction. The parsed tree is the
+    identical CASE/concat expression. ``a`` may be a column NAME
+    (preferred — enables the single-parse path; it is backtick-quoted,
+    so any name is one identifier, never SQL) or a Column (falls back
+    to per-call assembly for computed inputs)."""
     if isinstance(a, str):
+        ident = "`" + a.replace("`", "``") + "`"
         bands_sql = ", ".join(
             "concat(" + ", ".join(
-                f"CASE WHEN element_at({a}, {b * bits_per_band + i + 1}) > 0"
+                f"CASE WHEN element_at({ident}, {b * bits_per_band + i + 1}) > 0"
                 " THEN '1' ELSE '0' END"
                 for i in range(bits_per_band)
             ) + ")"

@@ -72,24 +72,26 @@ def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shared_pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels over ``shared_minhash_pairs``, kept
-    in the session cache like the band table: the kernel-escalating
-    component iterations execute EAGERLY (checkpointed rounds) while
-    the consuming plan is constructed, and three consumers
-    (dedup_cluster_components, dedup_corpus_representatives,
-    sample_leakage_safe_splits) cluster the SAME full candidate-pair
-    set — one label computation per session serves all three. The
-    labels frame is checkpoint-backed by the kernel itself, so no
-    extra persist is needed; determinism (min-label fixpoint) makes
-    the share value-invisible. pipeline_training_funnel deliberately
-    does NOT share it: its components run on the gate-induced
-    subgraph, a different edge set."""
+    in the session cache like the band table: the component kernel
+    executes EAGERLY (a bounded collect and driver-side labels, or
+    checkpointed rounds on a large graph) while the consuming plan is
+    constructed, and three consumers (dedup_cluster_components,
+    dedup_corpus_representatives, sample_leakage_safe_splits) cluster
+    the SAME full candidate-pair set — one label computation per
+    session serves all three. The labels frame is driver data or
+    checkpoint-backed, so no extra persist is needed; determinism
+    (labels are component minima) makes the share value-invisible.
+    pipeline_training_funnel deliberately does NOT share it: its
+    components run on the gate-induced subgraph, a different edge
+    set."""
     from ..operators.graph import connected_components_auto
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
         return connected_components_auto(
             shared_minhash_pairs(spark, sf_dir), "doc_a", "doc_b",
-            num_partitions=adaptive_partitions(docs),
+            num_partitions=lambda: adaptive_partitions(
+                load_table(spark, sf_dir, "documents")
+            ),
         )
 
     return session_frame(spark, sf_dir, "pair_components", build)

@@ -121,11 +121,12 @@ def _load_all() -> None:
 # a missing one). Clarified r8: a guard added to a branch that is
 # MACHINE-VERIFIED unreached by every registered query's fixture
 # execution also skips — the attested execution is byte-identical, and
-# the unreached-ness must itself be pinned (precedent: the r8
+# the unreached-ness must itself be pinned (precedent: the
 # empty-contraction short-circuit sits in connected_components_auto's
-# escalation branch, which tests/test_graph.py::
-# test_fixture_lsh_graph_routes_minlabel proves the dedup fixture
-# queries never enter — kernel == "minlabel", zero star rounds).
+# escalation branch, which the fixture dedup graphs never enter: they
+# take the local path, tests/test_graph.py::
+# test_fixture_lsh_graph_routes_local, and on the distributed path
+# finish in min-label, test_fixture_lsh_graph_routes_minlabel).
 _CHANGED: dict[str, int] = {
     "sample_stratified_by": 4,   # sampleBy rand() -> deterministic hash bucket + oracle
     "agg_freq_items": 4,         # exact frequent items + in_sketch contract + oracle
@@ -173,6 +174,12 @@ _CHANGED: dict[str, int] = {
     # schemas and oracles changed, so the green rows must re-attest.
     "sim_pq_quality": 13,
     "sim_ivf_cell_quality": 13,
+    # connected components of at most BOUND edges are labelled on the
+    # driver (operators/graph.py local path). Of the three driver-tier
+    # consumers only the funnel holds a front slot; the displaced
+    # dedup_cluster_components and dedup_corpus_representatives are
+    # re-attested by this round's LOCALCHECK (value-preserving).
+    "pipeline_training_funnel": 18,
 }
 
 _CANARIES: list[str] = [

@@ -102,12 +102,9 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sim_topk_lsh_bucket's driver slot was RETIRED in r5 to pay for
-# sim_ivf_cell_quality (r4 VERDICT "Next round" #5: one slot in, one
-# slot out — new registrations dilute evidence freshness). The operator
-# keeps full local evidence: test_sim_topk_lsh_bucket_matches_oracle
-# runs this exact oracle through the same compare the driver uses.
-LSH_BUCKET_ORACLE = f"""
+@query(
+    "sim_topk_lsh_bucket",
+    oracle=f"""
     WITH q AS (SELECT embedding AS query_vec,
                       {_BUCKET_SQL.format(v='embedding')} AS qbucket
                FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
@@ -119,15 +116,14 @@ LSH_BUCKET_ORACLE = f"""
       AND {_BUCKET_SQL.format(v='e.embedding')} = q.qbucket
     ORDER BY cosine_sim DESC, e.vec_id
     LIMIT {TOP_K}
-    """
-
-
+    """,
+    tier="local",
+)
 def sim_topk_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: score only vectors in the query's sign-bit LSH
     bucket (~1/256 of the data). At scale, write the table partitioned by
     bucket and this filter becomes partition pruning — the scan itself
-    shrinks 256×. Driver slot retired r5 (see LSH_BUCKET_ORACLE note);
-    oracle-checked locally in tests/test_similarity.py."""
+    shrinks 256×."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vector(spark, sf_dir).select(
         "query_vec", sign_bucket(F.col("query_vec")).alias("qbucket")

@@ -1074,7 +1074,6 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components_auto
     from .dedup_queries import shared_minhash_pairs
 
-    docs = load_table(spark, sf_dir, "documents")
     # the gate frame feeds FOUR subtrees (both semi-join key sets, the
     # per-source raw/gated counts, and the kept-side aggregate); persist
     # the narrow 4-column projection so the tokenize/regex rule stack
@@ -1095,7 +1094,9 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     non_reps = (
         connected_components_auto(
             ed, "doc_a", "doc_b",
-            num_partitions=adaptive_partitions(docs),
+            num_partitions=lambda: adaptive_partitions(
+                load_table(spark, sf_dir, "documents")
+            ),
         )
         .filter(F.col("v") != F.col("component_id"))
         .select(F.col("v").alias("doc_id"))

@@ -56,6 +56,10 @@ def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
+# Spark's own default for spark.sql.shuffle.partitions
+_SPARK_SHUFFLE_PARTITIONS = 200
+
+
 def adaptive_partitions(
     df: DataFrame, bytes_per_partition: int = 16 * 1024 * 1024
 ) -> int:
@@ -71,15 +75,18 @@ def adaptive_partitions(
     clamp and the configured shuffle width wins. Pass the BASE scan
     frame (its stats are exact); joins/aggregates only OVER-estimate,
     which degrades safely to the clamp."""
-    # r16 ADVICE guard: the stats probe reaches through classic-JVM
-    # internals (_jdf) and int()-casts the conf — a Spark Connect
-    # session (no _jdf) or an exotic conf value must degrade to the
-    # pre-r16 behavior (the configured shuffle width) instead of
-    # raising at plan-construction time in every iterative kernel.
+    # The stats probe reaches through classic-JVM internals (_jdf) and
+    # int()-casts the conf: a Spark Connect session (no _jdf, no
+    # sparkContext) or a non-numeric width must degrade to a configured
+    # width instead of raising at plan-construction time in every
+    # iterative kernel. Only the session conf is read, which both
+    # classic and Connect sessions have.
+    conf = df.sparkSession.conf
     try:
-        cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        cap = int(conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        cap = int(df.sparkSession.sparkContext.defaultParallelism)
+        fallback = conf.get("spark.default.parallelism", None)
+        cap = int(fallback) if fallback and fallback.isdigit() else _SPARK_SHUFFLE_PARTITIONS
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

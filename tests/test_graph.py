@@ -63,11 +63,15 @@ def test_long_chain_converges(spark):
     assert len(got) == 12
 
 
-def test_kernels_agree_on_random_graphs(spark):
-    """Both kernels must produce identical labels on arbitrary graphs;
+def test_kernels_agree_on_random_graphs(spark, monkeypatch):
+    """Every kernel must produce identical labels on arbitrary graphs;
     ground truth is a pure-Python union-find. Deterministic seeds, a
-    mix of sparse (forest-ish) and dense (clustered) regimes."""
+    mix of sparse (forest-ish) and dense (clustered) regimes. The auto
+    kernel runs on both of its paths: local, and distributed with
+    BOUND = 0."""
     import random
+
+    from erathia_market_etl_spark.operators import graph as G
 
     for seed, n, m in [(1, 24, 14), (2, 30, 55), (3, 18, 40)]:
         rng = random.Random(seed)
@@ -93,9 +97,13 @@ def test_kernels_agree_on_random_graphs(spark):
         star = _cc(spark, edges, connected_components_star)
         ml = _cc(spark, edges, connected_components)
         auto = _cc(spark, edges, connected_components_auto)
+        with monkeypatch.context() as m:
+            m.setattr(G, "BOUND", 0)
+            auto_dist = _cc(spark, edges, connected_components_auto)
         assert star == want, f"star kernel wrong for seed {seed}"
         assert ml == want, f"min-label kernel wrong for seed {seed}"
-        assert auto == want, f"auto kernel wrong for seed {seed}"
+        assert auto == want, f"auto kernel (local) wrong for seed {seed}"
+        assert auto_dist == want, f"auto kernel (distributed) wrong for seed {seed}"
 
 
 def test_star_raises_on_exhausted_iterations(spark):
@@ -130,13 +138,16 @@ def test_star_collapses_path_in_log_rounds(spark):
     assert ml != got  # labels not yet converged — the O(diameter) bound
 
 
-def test_auto_kernel_stays_minlabel_on_dense(spark):
-    """Kernel escalation (r6 VERDICT item 1), dense half: on dup-cluster
-    graphs — here three planted cliques, the near-clique shape LSH
-    candidate pairs produce — min-label converges inside the escalation
-    budget, so the auto kernel must finish WITHOUT ever invoking the
-    star kernel (its whole cost = the cheap labels-only rounds), with
-    labels exact."""
+def test_auto_kernel_stays_minlabel_on_dense(spark, monkeypatch):
+    """Kernel escalation, dense half: on dup-cluster graphs — here
+    three planted cliques, the near-clique shape LSH candidate pairs
+    produce — min-label converges inside the escalation budget, so the
+    distributed auto kernel (BOUND = 0 turns the local path off) must
+    finish WITHOUT ever invoking the star kernel (its whole cost = the
+    cheap labels-only rounds), with labels exact."""
+    from erathia_market_etl_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "BOUND", 0)
     edges = []
     for base in (100, 300, 500):
         members = [base + i for i in range(8)]
@@ -150,13 +161,16 @@ def test_auto_kernel_stays_minlabel_on_dense(spark):
     assert stats["rounds"] <= 4, stats
 
 
-def test_auto_kernel_escalates_chain_to_star(spark):
+def test_auto_kernel_escalates_chain_to_star(spark, monkeypatch):
     """The other half: a planted 128-vertex path (diameter 127) blows
-    the min-label escalation budget, so the auto kernel MUST hand the
-    contracted graph to the alternating-star kernel — the r5
-    diameter-robustness guarantee survives kernel selection — and
-    still converge correctly within escalate_after + O(log² n) total
-    rounds (min-label alone would need ~127)."""
+    the min-label escalation budget, so the distributed auto kernel
+    (BOUND = 0) MUST hand the contracted graph to the alternating-star
+    kernel — diameter robustness survives kernel selection — and still
+    converge correctly within escalate_after + O(log² n) total rounds
+    (min-label alone would need ~127)."""
+    from erathia_market_etl_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "BOUND", 0)
     n = 128
     edges = [(2000 + i, 2000 + i + 1) for i in range(n - 1)]
     stats: dict = {}
@@ -168,7 +182,7 @@ def test_auto_kernel_escalates_chain_to_star(spark):
 
 
 def test_auto_kernel_boundary_convergence_skips_star(spark, monkeypatch):
-    """r7 ADVICE (low): a graph whose min-label fixed point lands
+    """A graph whose min-label fixed point lands
     EXACTLY on round escalate_after makes a change in its last budget
     round, so _minlabel_rounds cannot observe convergence — but every
     surviving edge then joins same-label vertices, the contracted edge
@@ -183,6 +197,7 @@ def test_auto_kernel_boundary_convergence_skips_star(spark, monkeypatch):
         raise AssertionError("star kernel invoked on empty contraction")
 
     monkeypatch.setattr(G, "connected_components_star", boom)
+    monkeypatch.setattr(G, "BOUND", 0)  # the distributed path
     # path 0-1-2: round 1 (the free aggregation round) leaves
     # lbl(2) = 1; round 2 fixes it — the last change lands exactly on
     # the escalate_after = 2 budget boundary, converged stays False
@@ -282,15 +297,20 @@ def test_cached_edge_partitioning_survives_into_join(spark):
             spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_auto_kernel_property_random_graphs(spark):
+def test_auto_kernel_property_random_graphs(spark, monkeypatch):
     """Hypothesis property: on arbitrary random graphs — spanning the
     sparse/forest, dense/clustered, and chain-heavy regimes, self-loops
-    and duplicate/reversed edges included — the escalating auto kernel
-    must always equal a pure-Python union-find, regardless of which
-    escalation path it takes. Complements the fixed-seed three-kernel
-    pin with generative coverage of the routing boundary."""
+    and duplicate/reversed edges included — the escalating distributed
+    auto kernel (BOUND = 0) must always equal a pure-Python union-find,
+    regardless of which escalation path it takes. Complements the
+    fixed-seed three-kernel pin with generative coverage of the routing
+    boundary."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
+
+    from erathia_market_etl_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "BOUND", 0)
 
     @settings(max_examples=6, deadline=None)
     @given(st.data())
@@ -326,18 +346,21 @@ def test_auto_kernel_property_random_graphs(spark):
     run()
 
 
-def test_fixture_lsh_graph_routes_minlabel(spark):
-    """The bench-reclaim property (r6 VERDICT item 1), pinned on the
-    REAL pipeline input: the fixture corpus's MinHash-LSH candidate
-    graph is dense dup clusters, so the registered dedup pipelines'
-    auto kernel must finish inside the min-label budget — never paying
-    a star round. If LSH parameters or the corpus shape ever change
-    this, the kernel still returns exact labels (the oracle stays
-    green) but dedup_corpus_representatives' bench cost jumps; fail
+def test_fixture_lsh_graph_routes_minlabel(spark, monkeypatch):
+    """Pinned on the REAL pipeline input: the fixture corpus's
+    MinHash-LSH candidate graph is dense dup clusters, so on the
+    distributed path (BOUND = 0; at scale the graph outgrows BOUND) the
+    registered dedup pipelines' auto kernel must finish inside the
+    min-label budget — never paying a star round. If LSH parameters or
+    the corpus shape ever change this, the kernel still returns exact
+    labels (the oracle stays green) but the at-scale cost jumps; fail
     HERE first with the routing stats in hand."""
+    from erathia_market_etl_spark.operators import graph as G
     from erathia_market_etl_spark.operators.dedup import (
         minhash_candidate_pairs,
     )
+
+    monkeypatch.setattr(G, "BOUND", 0)
     from erathia_market_etl_spark.sources.parquet_io import load_table
 
     from .conftest import SF_SMOKE
@@ -349,6 +372,151 @@ def test_fixture_lsh_graph_routes_minlabel(spark):
     assert out.count() > 0
     assert stats["kernel"] == "minlabel", stats
     assert stats["rounds"] <= 6, stats
+
+
+def _union_find(edges):
+    """Pure-Python reference: vertex -> minimum vertex of its component."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_local_path_equals_minlabel_property(spark):
+    """Hypothesis property: on random graphs — self-loops, duplicate and
+    reversed edges, negative ids and planted chains included — the
+    auto kernel's local path labels every vertex exactly as the
+    min-label kernel does (and as a pure-Python union-find)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=8, deadline=None)
+    @given(st.data())
+    def run(data):
+        n = data.draw(st.integers(min_value=1, max_value=40))
+        m = data.draw(st.integers(min_value=1, max_value=80))
+        ids = st.integers(0, n - 1).map(lambda i: i * 7 - 50)
+        edges = [(data.draw(ids), data.draw(ids)) for _ in range(m)]
+        edges += [(b, a) for a, b in edges[: data.draw(st.integers(0, m))]]
+        if data.draw(st.booleans()):
+            edges += [(500 + i + 1, 500 + i) for i in range(25)]
+        stats: dict = {}
+        local = _cc(spark, edges, connected_components_auto, stats=stats)
+        assert stats == {"rounds": 0, "kernel": "local", "star_rounds": 0}
+        assert local == _cc(spark, edges, connected_components)
+        assert local == _union_find(edges)
+
+    run()
+
+
+@pytest.mark.parametrize("shape", [
+    "src long, dst long", "src int, dst long", "src short, dst short",
+    "non-nullable",
+])
+def test_local_path_schema_matches_distributed(spark, monkeypatch, shape):
+    """The local path returns the distributed path's schema exactly —
+    the wider endpoint type, v as nullable as the endpoints,
+    component_id nullable — so a consumer cannot tell which path ran.
+    A non-nullable edge frame (spark.range) keeps v non-nullable."""
+    from pyspark.sql import functions as F
+
+    from erathia_market_etl_spark.operators import graph as G
+
+    if shape == "non-nullable":
+        df = spark.range(4).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+        )
+    else:
+        df = spark.createDataFrame([(1, 2), (2, 3), (9, 9)], shape)
+    stats: dict = {}
+    local = connected_components_auto(df, "src", "dst", stats=stats)
+    assert stats["kernel"] == "local"
+    monkeypatch.setattr(G, "BOUND", 0)
+    dist = connected_components_auto(df, "src", "dst", stats=stats)
+    assert stats["kernel"] == "minlabel"
+    assert local.schema == dist.schema, (local.schema, dist.schema)
+    assert sorted(local.collect()) == sorted(dist.collect())
+
+
+def test_local_path_bound_is_inclusive(spark, monkeypatch):
+    """BOUND edges run locally; BOUND + 1 edges go to the distributed
+    kernels, with the same labels. The exchange width is asked for
+    only on the distributed path."""
+    from erathia_market_etl_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "BOUND", 5)
+    sized = []
+
+    def width():
+        sized.append(1)
+        return 2
+
+    edges = [(i, i + 1) for i in range(5)]
+    stats: dict = {}
+    got = _cc(spark, edges, connected_components_auto, stats=stats,
+              num_partitions=width)
+    assert got == {i: 0 for i in range(6)}
+    assert stats["kernel"] == "local", stats
+    assert sized == []
+    edges.append((10, 11))
+    got = _cc(spark, edges, connected_components_auto, stats=stats,
+              num_partitions=width)
+    assert stats["kernel"] == "minlabel", stats
+    assert got == {**{i: 0 for i in range(6)}, 10: 10, 11: 10}
+    assert sized == [1]
+
+
+def test_null_and_non_integral_endpoints_route_distributed(spark):
+    """A NULL endpoint or a non-integral id type is not the local path's
+    input: both go to the distributed kernels and return what
+    min-label returns."""
+    cases = [
+        (spark.createDataFrame([(1, None), (2, 3), (3, 4)], "src long, dst long"),
+         "minlabel"),
+        (spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string"),
+         "minlabel"),
+    ]
+    for df, kernel in cases:
+        stats: dict = {}
+        got = connected_components_auto(df, "src", "dst", stats=stats)
+        assert stats["kernel"] == kernel, stats
+        want = connected_components(df, "src", "dst")
+        assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+
+
+def test_fixture_lsh_graph_routes_local(spark, monkeypatch):
+    """The fixture corpus's MinHash-LSH candidate graph is far under
+    BOUND, so the registered dedup pipelines label it on the driver —
+    no Spark round — with the labels the distributed path computes."""
+    from erathia_market_etl_spark.operators import graph as G
+    from erathia_market_etl_spark.operators.dedup import (
+        minhash_candidate_pairs,
+    )
+    from erathia_market_etl_spark.sources.parquet_io import load_table
+
+    from .conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    pairs = minhash_candidate_pairs(docs, "text", "doc_id")
+    stats: dict = {}
+    local = connected_components_auto(pairs, "doc_a", "doc_b", stats=stats)
+    assert stats["kernel"] == "local", stats
+    got = sorted(local.collect())
+    assert got
+    monkeypatch.setattr(G, "BOUND", 0)
+    dist = connected_components_auto(pairs, "doc_a", "doc_b")
+    assert got == sorted(dist.collect())
 
 
 def test_triangle_counts_planted_shapes(spark):

@@ -555,6 +555,25 @@ def test_funnel_reuses_user_partitioning(spark):
         assert m.group(1).startswith("user_id"), m.group(0)
 
 
+def test_funnel_component_labels_join_by_broadcast(spark):
+    """The funnel's component labels come from the components kernel's
+    driver-side path and join back as a BroadcastExchange over a local
+    relation. A labels frame built from a Python list would be an RDD
+    scan of unknown size (`Scan ExistingRDD`) and the anti-join would
+    plan as a SortMergeJoin with two extra exchanges; a distributed
+    run would leave checkpoint RDD scans instead."""
+    from erathia_market_etl_spark.plans.text_queries import (
+        pipeline_training_funnel,
+    )
+
+    plan = plan_of(pipeline_training_funnel(spark, SF_T2))
+    assert re.search(
+        r"BroadcastExchange[^\n]*\n[ :|]*\+- LocalTableScan \[doc_id#\d+L\]", plan
+    ), plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_sample_k_per_group_uses_window_group_limit(spark):
     """The rn <= k cut must push into the window sort (WindowGroupLimit)
     so each map task keeps a running top-k per source before the

@@ -208,25 +208,30 @@ def test_assign_cells_zero_norm_guard(spark):
     assert out[2] == 0  # all -inf -> deterministic lowest-cid tie-break
 
 
-def test_sim_topk_lsh_bucket_matches_oracle(spark):
-    """Driver slot retired r5 (paid for sim_ivf_cell_quality); the
-    operator keeps the SAME oracle check locally, through the same
-    compare the driver runs."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        LSH_BUCKET_ORACLE,
-        sim_topk_lsh_bucket,
+def test_sign_band_array_quotes_the_column_name(spark):
+    """A column NAME goes into the single F.expr parse backtick-quoted:
+    a name with a space and a backtick is one identifier, and its band
+    keys equal the Column path's and a Python sign-bit reference."""
+    from erathia_market_etl_spark.operators.similarity import (
+        N_SIGN_BANDS,
+        SIGN_BITS_PER_BAND,
+        sign_band_array,
     )
-    from erathia_market_etl_spark.testing import compare_query
 
-    from .conftest import SF_SMOKE
-
-    r = compare_query(
-        "sim_topk_lsh_bucket",
-        sim_topk_lsh_bucket(spark, SF_SMOKE),
-        LSH_BUCKET_ORACLE,
-        SF_SMOKE,
-    )
-    assert r.ok, r
+    vec = [(-1.0) ** (i // 3) * (i + 1) for i in range(N_SIGN_BANDS * SIGN_BITS_PER_BAND)]
+    name = "emb `v` x"
+    df = spark.createDataFrame([(vec,)], "embedding array<double>")
+    odd = df.withColumnRenamed("embedding", name)
+    got = odd.select(sign_band_array(name).alias("k")).first()["k"]
+    want = [
+        "".join(
+            "1" if vec[b * SIGN_BITS_PER_BAND + i] > 0 else "0"
+            for i in range(SIGN_BITS_PER_BAND)
+        )
+        for b in range(N_SIGN_BANDS)
+    ]
+    assert got == want
+    assert df.select(sign_band_array(F.col("embedding")).alias("k")).first()["k"] == want
 
 
 def test_ivf_cells_partitioned_write_prunes_probes(spark, clustered_emb, tmp_path):

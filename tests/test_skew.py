@@ -251,6 +251,45 @@ def test_adaptive_partitions_falls_back_without_jdf(spark):
     assert adaptive_partitions(NoJdf()) == cap
 
 
+def test_adaptive_partitions_fallback_never_touches_spark_context():
+    """A non-numeric spark.sql.shuffle.partitions (e.g. "auto") on a
+    session without a sparkContext (Spark Connect) falls back to
+    spark.default.parallelism from the session conf, else Spark's
+    default width — reading sparkContext would raise."""
+    from erathia_market_etl_spark.sources.parquet_io import (
+        adaptive_partitions,
+    )
+
+    class Conf:
+        def __init__(self, values):
+            self.values = values
+
+        def get(self, key, *default):
+            return self.values.get(key, *default)
+
+    class ConnectLike:
+        def __init__(self, values):
+            self.conf = Conf(values)
+
+        @property
+        def sparkContext(self):
+            raise RuntimeError("sparkContext is not available on Connect")
+
+    class Frame:
+        def __init__(self, values):
+            self.sparkSession = ConnectLike(values)
+
+        @property
+        def _jdf(self):
+            raise AttributeError("_jdf")
+
+    auto = {"spark.sql.shuffle.partitions": "auto"}
+    assert adaptive_partitions(
+        Frame({**auto, "spark.default.parallelism": "6"})
+    ) == 6
+    assert adaptive_partitions(Frame(auto)) == 200
+
+
 def test_bucket_stats_report_overflow(degenerate_docs):
     from erathia_market_etl_spark.operators.dedup import (
         lsh_bucket_stats,
